@@ -202,12 +202,12 @@ def bench_frontier(spark, n_urls: int) -> dict:
     fresh = bloom_gated_anti_join(
         cand.select("fetch_url", "priority"), seen, bloom, "fetch_url",
         # 128-bit hash-pair confirm: the seen side shuffles 16 B/row
-        # instead of URL strings and skips the distinct pre-agg
-        # (collision bound ~3e-19 at 10^10 URLs; see bloom.py).
+        # instead of URL strings (collision bound ~3e-19 at 10^10
+        # URLs; see bloom.py).
         confirm_on="hashes",
     )
     scheduled, _deferred = politeness_gate(
-        fresh, None, default_budget=100_000, salt_n=32
+        fresh, None, default_budget=100_000
     )
     n_scheduled = scheduled.count()
     wall = time.time() - t0

@@ -240,7 +240,7 @@ def partitioned_bloom_anti_join(
     probed = partitioned_probe_bloom(new, shard_rows, m, k, n_shards, key_col)
     definitely_new = probed.where(~F.col("maybe_seen")).drop("maybe_seen")
     suspects = probed.where(F.col("maybe_seen")).drop("maybe_seen")
-    confirmed_new = suspects.join(seen.select(key_col).distinct(), key_col, "left_anti")
+    confirmed_new = suspects.join(seen.select(key_col), key_col, "left_anti")
     return definitely_new.unionByName(confirmed_new)
 
 
@@ -262,9 +262,11 @@ def bloom_gated_anti_join(
     ``confirm_on``: ``"key"`` confirms suspects with a string anti-join
     on ``key_col`` (the byte-exact default).  ``"hashes"`` confirms on
     the pre-projected 128-bit ``(xxhash64(key), xxhash64(key, seed))``
-    pair the probe already computed: the seen side then shuffles 16
-    bytes/row instead of URL strings and needs NO distinct pre-agg
-    (anti-join ignores right-side duplicates).  A collision would need
+    pair the probe already computed, so the seen side shuffles 16
+    bytes/row instead of URL strings.  Neither mode pre-aggregates the
+    seen side: a left-anti join ignores right-side duplicates, so a
+    ``distinct`` would only add a hash aggregate over the whole seen
+    base and change no row.  A collision would need
     two distinct URLs agreeing on both independent 64-bit hashes —
     expected collisions n^2/2^129 ≈ 3e-19 at the 10^10-URL target, far
     below any hardware error rate; use it when the seen-side shuffle is
@@ -297,7 +299,5 @@ def bloom_gated_anti_join(
             .unionByName(null_new)
             .drop("_h1", "_h2")
         )
-    confirmed_new = suspects.join(
-        seen.select(key_col).distinct(), key_col, "left_anti"
-    )
+    confirmed_new = suspects.join(seen.select(key_col), key_col, "left_anti")
     return definitely_new.unionByName(confirmed_new)

@@ -197,7 +197,6 @@ def politeness_gate(
     default_budget: int = 1_000_000_000,
     url_col: str = "fetch_url",
     priority_col: str = "priority",
-    salt_n: int = 16,  # kept for API compat; parallel rank needs no salt
     key_cols: list[str] | None = None,
 ) -> tuple[DataFrame, DataFrame]:
     """Split the frontier into (scheduled, deferred) for this wave.

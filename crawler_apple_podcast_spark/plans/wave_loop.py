@@ -65,7 +65,6 @@ class WaveConfig:
     use_robots_disallow: bool = False  # reference never consults robots (quirk)
     default_budget: int = 1 << 30
     default_crawl_delay: int = 5
-    salt_n: int = 16
     # Exponential-backoff retries of failed fetches (operators/retry.py):
     # None = off (the reference's behavior — failures are lost,
     # crawler_podcasts.py:28-30 — and the e1 parity oracles assume it);
@@ -250,7 +249,6 @@ def run_crawl(
                 wave_budgets,
                 default_budget=cfg.default_budget,
                 key_cols=["seed_index", "fetch_url"],
-                salt_n=cfg.salt_n,
             )
             if pace_delays is not None:
                 counts = (

@@ -14,10 +14,15 @@ Design
   production — the transformation is source-agnostic).
 - Each micro-batch runs inside ``foreachBatch``: in-batch dedupe,
   Bloom-gated EXACT anti-join against the persistent seen set, per-host
-  politeness gate, then two idempotent appends (scheduled rows to the
-  out dir, their urls to the seen dir) keyed by ``batch_id`` so a
-  replayed batch overwrites rather than duplicates — exactly-once
-  downstream given the checkpointed source offsets.
+  politeness gate, then three idempotent writes (scheduled rows to the
+  out dir, their urls to the seen dir, deferred rows to the carry dir)
+  keyed by ``batch_id`` so a replayed batch overwrites rather than
+  duplicates — exactly-once downstream given the checkpointed source
+  offsets.
+- The batch plan is evaluated once: the confirmed ``fresh`` frame and
+  both gate outputs are persisted for the batch, every write and the
+  optional snapshot commit (data and counts) read those cached frames,
+  and all of them are released when the batch ends.
 - Watermarked windowed aggregation (``host_rate_metrics``) gives
   per-host scheduling-rate observability with bounded state; late
   discoveries beyond the watermark are dropped from metrics only,
@@ -32,12 +37,16 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
+from pyspark.sql.types import StructType
 
 from ..functions.urls import canonicalize_url, host_of
 from ..operators.bloom import BloomShards, build_bloom_shards, bloom_gated_anti_join
-from ..operators.politeness import politeness_gate, release_rank_cache
+from ..operators.politeness import politeness_gate
 
 CANDIDATE_SCHEMA = "url STRING, priority INT, discovered_ts TIMESTAMP"
+# Given to every read of the seen dirs, so no read starts a
+# schema-inference job.
+SEEN_SCHEMA = "fetch_url STRING"
 
 
 @dataclass
@@ -110,18 +119,23 @@ def _read_seen(spark: SparkSession, seen_dir: str, exclude_batch: int) -> DataFr
         f.endswith(".parquet") for _, _, fs in os.walk(seen_dir) for f in fs
     ):
         return (
-            spark.read.parquet(seen_dir)
+            spark.read.schema(f"{SEEN_SCHEMA}, batch_id INT")
+            .parquet(seen_dir)
             .where(F.col("batch_id") != exclude_batch)
             .select("fetch_url")
         )
-    return spark.createDataFrame([], "fetch_url STRING")
+    return spark.createDataFrame([], SEEN_SCHEMA)
 
 
-def _latest_carry(spark: SparkSession, carry_dir: str, batch_id: int) -> DataFrame | None:
+def _latest_carry(
+    spark: SparkSession, carry_dir: str, batch_id: int, schema: StructType
+) -> DataFrame | None:
     """Deferred rows carried from the most recent prior batch.  Each
     batch's carry output subsumes all earlier ones (still-deferred rows
     re-enter candidates and are re-deferred), so only the latest dir
-    below ``batch_id`` is read — O(pending), not O(history)."""
+    below ``batch_id`` is read — O(pending), not O(history).  ``schema``
+    is the candidates' ``(fetch_url, priority)`` schema the carry was
+    written with."""
     if not os.path.isdir(carry_dir):
         return None
     prior = [
@@ -131,9 +145,7 @@ def _latest_carry(spark: SparkSession, carry_dir: str, batch_id: int) -> DataFra
     ]
     if not prior:
         return None
-    return spark.read.parquet(f"{carry_dir}/batch_id={max(prior)}").select(
-        "fetch_url", "priority"
-    )
+    return spark.read.schema(schema).parquet(f"{carry_dir}/batch_id={max(prior)}")
 
 
 def process_candidate_batch(
@@ -148,7 +160,7 @@ def process_candidate_batch(
         canonicalize_url(F.col("url")).alias("fetch_url"),
         F.col("priority"),
     )
-    carry = _latest_carry(spark, cfg.resolved_carry_dir(), batch_id)
+    carry = _latest_carry(spark, cfg.resolved_carry_dir(), batch_id, cand.schema)
     if carry is not None:
         cand = cand.unionByName(carry)
     # Deterministic duplicate resolution: when a carried deferred row
@@ -190,9 +202,14 @@ def process_candidate_batch(
             recent = recent.unionByName(p)
         fresh = fresh.join(recent, "fetch_url", "left_anti")
 
+    # Cached so the gate's two outputs, the three writes and the
+    # snapshot commit share one run of canonicalize → probe → confirm.
+    fresh = fresh.persist()
     scheduled, deferred = politeness_gate(
         fresh, None, default_budget=cfg.default_budget
     )
+    scheduled, deferred = scheduled.persist(), deferred.persist()
+    batch_caches.extend([fresh, scheduled, deferred])
     # Idempotent per-batch dirs: a replayed batch overwrites its own
     # output instead of appending a duplicate; the dir name doubles as
     # a hive-style `batch_id` partition column on read.
@@ -209,9 +226,8 @@ def process_candidate_batch(
 
     # Track this batch's seen rows as disk-backed recent tail.
     st.recent_parts = [(b, p) for b, p in st.recent_parts if b != batch_id]
-    st.recent_parts.append(
-        (batch_id, spark.read.parquet(f"{cfg.seen_dir}/batch_id={batch_id}"))
-    )
+    seen_part = spark.read.schema(SEEN_SCHEMA).parquet(f"{cfg.seen_dir}/batch_id={batch_id}")
+    st.recent_parts.append((batch_id, seen_part))
 
     # Optional snapshot commit: publish this batch as wave `batch_id`
     # through the manifest/HEAD protocol.  Exactly-once under replay:
@@ -220,32 +236,27 @@ def process_candidate_batch(
     #   data write is mode=overwrite, the orphan is replaced);
     # - crash AFTER HEAD moved (offsets not yet committed) ->
     #   batch_id <= head -> skip, nothing double-publishes.
-    # Frames are read back from the per-batch dirs just written, so the
-    # commit never re-executes the batch plan.
+    # The commit writes and counts the cached gate outputs that fed the
+    # per-batch dirs, so it never re-executes the batch plan.
     if cfg.snapshot_root:
         from ..plans.snapshots import SnapshotStore
 
         store = SnapshotStore(spark, cfg.snapshot_root)
         head = store.last_committed_wave()
         if head is None or batch_id > head:
-            sched_back = spark.read.parquet(f"{cfg.out_dir}/batch_id={batch_id}")
-            defer_back = spark.read.parquet(
-                f"{cfg.resolved_carry_dir()}/batch_id={batch_id}"
-            )
             store.commit_wave(
                 int(batch_id),
-                {"scheduled": sched_back, "deferred": defer_back},
+                {"scheduled": scheduled, "deferred": deferred},
                 metrics={
                     "batch_id": int(batch_id),
-                    "n_scheduled": sched_back.count(),
-                    "n_deferred": defer_back.count(),
+                    "n_scheduled": scheduled.count(),
+                    "n_deferred": deferred.count(),
                 },
             )
 
-    # Outputs are on disk — release this batch's cached intermediates
-    # (rank cache + probed frame); a long-running stream must not
+    # Outputs are on disk — release this batch's cached frames (probed,
+    # fresh, scheduled, deferred); a long-running stream must not
     # accumulate storage memory per batch.
-    release_rank_cache()
     for df in batch_caches:
         df.unpersist()
 

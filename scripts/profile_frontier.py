@@ -40,5 +40,5 @@ fresh = bloom_gated_anti_join(frontier.select("fetch_url", "priority"), seen, bl
 print("fresh_count", fresh.count(), round(time.time() - t0, 2))
 
 t0 = time.time()
-scheduled, _def = politeness_gate(fresh, None, default_budget=100_000, salt_n=32)
+scheduled, _def = politeness_gate(fresh, None, default_budget=100_000)
 print("scheduled_count", scheduled.count(), round(time.time() - t0, 2))

@@ -27,14 +27,29 @@ def test_no_false_negatives(spark):
 
 
 def test_gated_anti_join_equals_exact(spark):
-    seen = _urls(spark, 400, "seen")
+    from crawler_apple_podcast_spark.operators.bloom import (
+        build_bloom_shard_rows,
+        partitioned_bloom_anti_join,
+    )
+
+    # Seen keys repeated up to three times: no confirm pre-aggregates
+    # the seen side, and an anti-join must not need it to.
+    seen = (
+        _urls(spark, 400, "seen")
+        .unionAll(_urls(spark, 150, "seen"))
+        .unionAll(_urls(spark, 50, "seen"))
+    )
     new = _urls(spark, 300, "seen").unionAll(_urls(spark, 200, "new"))
+    want = sorted(r.url for r in new.join(seen, "url", "left_anti").collect())
+    assert len(want) == 200
     # tiny filter -> plenty of false positives; result must still be exact
     bloom = build_bloom_shards(seen, n_shards=4, m_bits=1 << 10, k=3)
-    got = sorted(r.url for r in bloom_gated_anti_join(new, seen, bloom).collect())
-    want = sorted(r.url for r in new.join(seen, "url", "left_anti").collect())
-    assert got == want
-    assert len(got) == 200
+    for confirm_on in ("key", "hashes"):
+        got = bloom_gated_anti_join(new, seen, bloom, confirm_on=confirm_on)
+        assert sorted(r.url for r in got.collect()) == want, confirm_on
+    rows, m = build_bloom_shard_rows(seen, n_shards=4, m_bits=1 << 10, k=3)
+    got = partitioned_bloom_anti_join(new, seen, rows, m, 3, 4)
+    assert sorted(r.url for r in got.collect()) == want
 
 
 def test_fpp_reasonable(spark):

@@ -42,7 +42,7 @@ def test_gate_respects_budget_and_is_exact_topk(spark):
         [(f"host{h}.example", 5) for h in range(3)], "host STRING, budget INT"
     )
     sched, deferred = politeness_gate(
-        f, budgets, key_cols=["seed_index", "fetch_url"], salt_n=4
+        f, budgets, key_cols=["seed_index", "fetch_url"]
     )
     per_host = (
         sched.withColumn("h", F.parse_url("fetch_url", F.lit("HOST")))
