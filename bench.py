@@ -31,7 +31,7 @@ from pyspark.sql import functions as F
 
 from crawler_apple_podcast_spark.functions.urls import canonicalize_url
 from crawler_apple_podcast_spark.operators.bloom import build_bloom_shards, bloom_gated_anti_join
-from crawler_apple_podcast_spark.operators.politeness import politeness_gate, release_rank_cache
+from crawler_apple_podcast_spark.operators.politeness import politeness_gate
 from crawler_apple_podcast_spark.operators import similarity as S
 from crawler_apple_podcast_spark.operators.dedupe import release_dedupe_cache
 from crawler_apple_podcast_spark.operators.redirects import release_redirect_cache
@@ -112,13 +112,12 @@ HEADLINE = [
 def release_all_caches(spark) -> None:
     """Steady-state semantics between timed runs: drain every module
     cache registry (similarity signatures/candidates, dedupe estar
-    frames, politeness rank intermediates) and drop all storage blocks.
+    frames, redirect mappings) and drop all storage blocks.
     Without this, repeated headline reps accumulate persisted frames
     and later queries inherit the churn (VERDICT r3: d1's spread rose
     monotonically 1.78 -> 4.85 across reps)."""
     S.release_similarity_cache()
     release_dedupe_cache()
-    release_rank_cache()
     release_redirect_cache()
     spark.catalog.clearCache()
 

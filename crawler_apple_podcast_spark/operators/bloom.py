@@ -37,9 +37,6 @@ class BloomShards:
     shards: dict[int, bytes]  # shard -> bit array
     n_items: int = 0
 
-    def to_rows(self) -> list[tuple[int, bytes, int]]:
-        return [(s, b, self.n_items) for s, b in sorted(self.shards.items())]
-
 
 def _positions(h1: np.ndarray, h2: np.ndarray, k: int, m: int) -> np.ndarray:
     """(n, k) probe positions via double hashing, vectorized uint64.
@@ -69,7 +66,7 @@ def _sized_m(n_shards: int, m_bits: int | None, expected_items: int | None, bits
     return 1 << (m_bits - 1).bit_length()  # power of two: probe uses AND, not mod
 
 
-def build_bloom_shard_rows(
+def build_bloom_shards(
     seen: DataFrame,
     key_col: str = "url",
     n_shards: int = 32,
@@ -77,13 +74,18 @@ def build_bloom_shard_rows(
     k: int = 5,
     expected_items: int | None = None,
     bits_per_item: int = 12,
-) -> tuple[DataFrame, int]:
-    """Distributed build WITHOUT driver assembly: one Arrow group per
-    shard -> (shard, bits, n) rows left distributed.  Returns the rows
-    frame and the per-shard bit width ``m``.  This is the 10^10-scale
-    form: at 12 bits/item the full filter is ~15 GB — never collected;
-    feed the rows to ``partitioned_bloom_anti_join`` (co-grouped probe)
-    or persist them as a table between waves."""
+) -> BloomShards:
+    """Distributed build (one Arrow group per shard -> one
+    ``(shard, bits, n)`` row) + driver assembly for BROADCAST probing,
+    the fast path while the filter fits executors — up to a few
+    hundred MB.
+
+    Size the filter: pass ``expected_items`` (total seen-set size) to
+    auto-size ``m_bits`` to ``bits_per_item`` (12 -> ~0.5% fpp at k=5);
+    an oversized filter wastes broadcast bandwidth to every Python
+    worker, an undersized one just sends more rows to the exact
+    confirm join (never wrong, only slower).
+    """
     if n_shards & (n_shards - 1) != 0:
         # A non-pow2 count would mis-shard probes vs the pmod-built
         # shards (probe uses AND); fail loudly, asserts vanish under -O.
@@ -106,33 +108,8 @@ def build_bloom_shard_rows(
         hashed.select("_shard", "_h1", "_h2")
         .groupBy("_shard")
         .applyInPandas(build, schema="shard INT, bits BINARY, n BIGINT")
+        .collect()
     )
-    return rows, m
-
-
-def build_bloom_shards(
-    seen: DataFrame,
-    key_col: str = "url",
-    n_shards: int = 32,
-    m_bits: int | None = None,
-    k: int = 5,
-    expected_items: int | None = None,
-    bits_per_item: int = 12,
-) -> BloomShards:
-    """Distributed build + driver assembly for BROADCAST probing (the
-    fast path while the filter fits executors — up to a few hundred MB).
-
-    Size the filter: pass ``expected_items`` (total seen-set size) to
-    auto-size ``m_bits`` to ``bits_per_item`` (12 -> ~0.5% fpp at k=5);
-    an oversized filter wastes broadcast bandwidth to every Python
-    worker, an undersized one just sends more rows to the exact
-    confirm join (never wrong, only slower).  Past broadcast scale, use
-    ``build_bloom_shard_rows`` + ``partitioned_bloom_anti_join``.
-    """
-    rows_df, m = build_bloom_shard_rows(
-        seen, key_col, n_shards, m_bits, k, expected_items, bits_per_item
-    )
-    rows = rows_df.collect()
     shards = {r["shard"]: bytes(r["bits"]) for r in rows}
     total = sum(r["n"] for r in rows)
     return BloomShards(n_shards=n_shards, m_bits=m, k=k, shards=shards, n_items=total)
@@ -176,88 +153,19 @@ def probe_bloom(
     return out if keep_hashes else out.drop("_h1", "_h2")
 
 
-def partitioned_probe_bloom(
-    df: DataFrame,
-    shard_rows: DataFrame,
-    m: int,
-    k: int,
-    n_shards: int,
-    key_col: str = "url",
-    out_col: str = "maybe_seen",
-) -> DataFrame:
-    """Probe WITHOUT broadcasting the filter: candidates are co-grouped
-    with their shard's single bit-array row (`cogroup` on the shard
-    id), so each task holds only ``m/8`` bytes of filter — the 10^10
-    form, where the full filter (~15 GB at 12 bits/item) can live
-    neither on the driver nor in every executor.  One shuffle of the
-    candidates on the shard id; the filter rows shuffle is n_shards
-    tiny rows."""
-    if n_shards & (n_shards - 1) != 0:
-        raise ValueError(f"n_shards must be a power of two, got {n_shards}")
-    hashed = _with_hashes(df, key_col).withColumn(
-        "_shard", F.pmod(F.col("_h1"), F.lit(n_shards)).cast("int")
-    )
-    out_fields = [f"`{c}`" for c in df.columns]
-    out_schema = ", ".join(
-        [f"{f} {t}" for f, t in zip(out_fields, [x.dataType.simpleString() for x in df.schema.fields])]
-        + [f"{out_col} boolean"]
-    )
-    base_cols = list(df.columns)
-
-    def probe(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
-        if len(left) == 0:
-            return pd.DataFrame(columns=base_cols + [out_col])
-        if len(right) == 0:
-            hit = np.zeros(len(left), dtype=bool)  # no seen rows in shard
-        else:
-            arr = np.frombuffer(right["bits"].iloc[0], dtype=np.uint8)
-            pos = _positions(left["_h1"].to_numpy(), left["_h2"].to_numpy(), k, m)
-            hit = np.all(arr[pos >> 3] & (1 << (pos & 7)).astype(np.uint8) != 0, axis=1)
-        out = left[base_cols].copy()
-        out[out_col] = hit
-        return out
-
-    return (
-        hashed.groupBy("_shard")
-        .cogroup(shard_rows.groupBy("shard"))
-        .applyInPandas(probe, schema=out_schema)
-    )
-
-
-def partitioned_bloom_anti_join(
-    new: DataFrame,
-    seen: DataFrame,
-    shard_rows: DataFrame,
-    m: int,
-    k: int,
-    n_shards: int,
-    key_col: str = "url",
-) -> DataFrame:
-    """``bloom_gated_anti_join`` for filters past broadcast scale: the
-    co-grouped probe gates, the exact anti-join confirms suspects —
-    identical output to the exact anti-join (and to the broadcast
-    path), tested in tests/test_bloom.py."""
-    probed = partitioned_probe_bloom(new, shard_rows, m, k, n_shards, key_col)
-    definitely_new = probed.where(~F.col("maybe_seen")).drop("maybe_seen")
-    suspects = probed.where(F.col("maybe_seen")).drop("maybe_seen")
-    confirmed_new = suspects.join(seen.select(key_col), key_col, "left_anti")
-    return definitely_new.unionByName(confirmed_new)
-
-
 def bloom_gated_anti_join(
     new: DataFrame, seen: DataFrame, bloom: BloomShards, key_col: str = "url",
-    materialize: bool = True,
     cache_registry: list[DataFrame] | None = None,
     confirm_on: str = "key",
 ) -> DataFrame:
     """Exact anti-join accelerated by the Bloom gate: probe-negatives
     bypass the shuffle entirely; probe-positives are confirmed exactly.
 
-    ``materialize`` persists the probed frame so the two union branches
-    (and any downstream consumer) run the probe UDF exactly once.
-    Long-running callers (streaming) pass ``cache_registry`` to receive
-    the persisted frame for release once the batch output is
-    materialized — otherwise it lives for the session.
+    The probed frame is persisted so the two union branches (and any
+    downstream consumer) run the probe UDF exactly once.  Long-running
+    callers (streaming) pass ``cache_registry`` to receive the
+    persisted frame for release once the batch output is materialized
+    — otherwise it lives for the session.
 
     ``confirm_on``: ``"key"`` confirms suspects with a string anti-join
     on ``key_col`` (the byte-exact default).  ``"hashes"`` confirms on
@@ -272,12 +180,12 @@ def bloom_gated_anti_join(
     below any hardware error rate; use it when the seen-side shuffle is
     the bottleneck.
     """
+    if confirm_on not in ("key", "hashes"):
+        raise ValueError(f"confirm_on must be 'key' or 'hashes', got {confirm_on!r}")
     keep = confirm_on == "hashes"
-    probed = probe_bloom(new, bloom, key_col, keep_hashes=keep)
-    if materialize:
-        probed = probed.persist()
-        if cache_registry is not None:
-            cache_registry.append(probed)
+    probed = probe_bloom(new, bloom, key_col, keep_hashes=keep).persist()
+    if cache_registry is not None:
+        cache_registry.append(probed)
     definitely_new = probed.where(~F.col("maybe_seen")).drop("maybe_seen")
     suspects = probed.where(F.col("maybe_seen")).drop("maybe_seen")
     if keep:

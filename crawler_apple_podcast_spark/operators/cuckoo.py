@@ -327,19 +327,16 @@ def cuckoo_gated_anti_join(
     seen: DataFrame,
     filt: CuckooShards,
     key_col: str = "url",
-    materialize: bool = True,
     cache_registry: list[DataFrame] | None = None,
 ) -> DataFrame:
     """Exact anti-join accelerated by the cuckoo gate: probe-negatives
     are definitely-new (no false negatives), probe-positives confirmed
     by the exact anti-join — output byte-equal to the exact
     computation, same contract as bloom_gated_anti_join."""
-    probed = probe_cuckoo(new, filt, key_col)
-    if materialize:
-        probed = probed.persist()
-        if cache_registry is not None:
-            cache_registry.append(probed)
+    probed = probe_cuckoo(new, filt, key_col).persist()
+    if cache_registry is not None:
+        cache_registry.append(probed)
     definitely_new = probed.where(~F.col("maybe_seen")).drop("maybe_seen")
     suspects = probed.where(F.col("maybe_seen")).drop("maybe_seen")
-    confirmed = suspects.join(seen.select(key_col).distinct(), key_col, "left_anti")
+    confirmed = suspects.join(seen.select(key_col), key_col, "left_anti")
     return definitely_new.unionByName(confirmed)

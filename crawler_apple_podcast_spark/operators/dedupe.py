@@ -28,7 +28,7 @@ from pyspark.sql import functions as F
 # Persisted survivor frames returned by sequential_or_dedupe, so
 # long-lived sessions (seed discovery per wave) can release them once
 # the wave's outputs are materialized — same pattern as
-# politeness.release_rank_cache / bloom's cache_registry.
+# similarity.release_similarity_cache / bloom's cache_registry.
 _dedupe_cache: list[DataFrame] = []
 
 

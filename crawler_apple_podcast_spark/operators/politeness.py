@@ -10,18 +10,12 @@ corpus' own ``robots.txt`` rows (broadcast as a tiny dim table).
 Scale note: ranking "top-B per host" with a window over ``host`` puts
 the whole ``amp-api.podcasts.apple.com`` skew bucket in ONE task — at
 the 10^10-URL target that single sorted partition is the job.  The
-gate instead computes the exact per-host rank with a *parallel* sort:
-
-1. ``repartitionByRange(host, priority, hash, url)`` — Spark's
-   sampled range exchange + per-partition sort, fully parallel; the
-   hot host spans MANY consecutive partitions instead of one task.
-2. ``monotonically_increasing_id()`` after the sort is
-   ``(partition_id << 33) + local_row_index`` — a JVM-side,
-   order-stable partition-local index for free (no Python boundary,
-   no second window).
-3. Per-partition counts (tiny, one row per partition) turn the local
-   index into a global sort position; ``min(position) per host``
-   (a parallel agg) turns that into the exact per-host rank.
+gate instead ranks with ``hash_bucketed_host_rank``: the top bits of
+the uniform url hash are an order-aligned salt, so the hot host spans
+many window partitions, and one tiny ``(host, priority, bucket)``
+count aggregate turns each partition-local row number into the exact
+per-host rank — one shuffle of the frontier, no range-sampling pass,
+no persisted intermediate.
 
 ``deferred`` falls out as ``rank > budget`` — no anti-join needed.
 """
@@ -33,18 +27,10 @@ from pyspark.sql import functions as F
 
 from ..functions.urls import host_of, url_hash
 
-_MID_BITS = 33  # monotonically_increasing_id: (pid << 33) + local index
-
-# Persisted intermediates of parallel_host_rank, kept so long-running
-# callers (the wave loop) can release them once the wave's outputs are
-# materialized — otherwise every wave leaks one cached frame.
-_rank_cache: list[DataFrame] = []
-
 
 def release_rank_cache() -> None:
-    """Unpersist all rank intermediates persisted since the last call."""
-    while _rank_cache:
-        _rank_cache.pop().unpersist()
+    """Does nothing: the gate's ranker persists no intermediate.  Kept
+    because the benchmark harness (``perfbench/``) still calls it."""
 
 
 def parse_robots(pages: DataFrame) -> DataFrame:
@@ -82,73 +68,6 @@ def host_budgets(robots: DataFrame, wave_seconds: int, default_delay: int = 5) -
         "host",
         F.greatest(F.lit(1), (F.lit(wave_seconds) / delay).cast("int")).alias("budget"),
     )
-
-
-def parallel_host_rank(
-    df: DataFrame,
-    host_col: str,
-    order_cols: list,
-    out_col: str = "_rn",
-    num_partitions: int | None = None,
-) -> DataFrame:
-    """Exact 1-based rank of each row within its ``host_col`` group by
-    ``order_cols``, computed with a parallel range sort — no per-group
-    single-task window, so a group holding 90% of all rows (the
-    apple.com skew bucket) still ranks at full cluster parallelism.
-
-    The returned frame is range-sorted; ties beyond ``order_cols`` get
-    an arbitrary but stable-within-run order (callers include a unique
-    key, e.g. the url, for full determinism).
-    """
-    spark = df.sparkSession
-    if num_partitions is None:
-        num_partitions = int(spark.conf.get("spark.sql.shuffle.partitions"))
-
-    keys = [F.col(host_col), *order_cols]
-    s = (
-        df.repartitionByRange(num_partitions, *keys)
-        .sortWithinPartitions(*keys)
-        # (pid << 33) + local index, assigned AFTER the sort, JVM-side.
-        .withColumn("_mid", F.monotonically_increasing_id())
-        .withColumn("_pid", F.shiftright("_mid", _MID_BITS).cast("int"))
-        .withColumn("_lidx", F.col("_mid").bitwiseAND(F.lit((1 << _MID_BITS) - 1)))
-        .drop("_mid")
-        .persist()
-    )
-    _rank_cache.append(s)
-
-    # ONE aggregate over the big frame; everything else happens on the
-    # tiny (pid, host) stats frame (<= partitions + hosts rows):
-    #   pstart[pid]      cumulative row count of earlier partitions
-    #   gstart(pid,host) global position of the host's first row in pid
-    #   hstart[host]     global position of the host's first row overall
-    #   delta(pid,host)  pstart - hstart  ->  rank = lidx + delta + 1
-    stats = s.groupBy("_pid", host_col).agg(
-        F.count(F.lit(1)).alias("_cnt"), F.min("_lidx").alias("_flidx")
-    )
-    pid_w = Window.orderBy("_pid").rowsBetween(Window.unboundedPreceding, -1)
-    pid_offsets = (
-        stats.groupBy("_pid")
-        .agg(F.sum("_cnt").alias("_pcnt"))
-        .withColumn("_pstart", F.coalesce(F.sum("_pcnt").over(pid_w), F.lit(0)))
-        .drop("_pcnt")
-    )
-    st = stats.join(pid_offsets, "_pid").withColumn(
-        "_gstart", F.col("_pstart") + F.col("_flidx")
-    )
-    st = st.withColumn(
-        "_hstart", F.min("_gstart").over(Window.partitionBy(host_col))
-    )
-    deltas = st.select(
-        "_pid", host_col, (F.col("_pstart") - F.col("_hstart")).alias("_delta")
-    )
-
-    # Broadcast join preserves the range partitioning — no extra
-    # shuffle of the big frame.
-    ranked = s.join(F.broadcast(deltas), ["_pid", host_col]).withColumn(
-        out_col, (F.col("_lidx") + F.col("_delta") + 1).cast("int")
-    )
-    return ranked.drop("_pid", "_lidx", "_delta")
 
 
 def hash_bucketed_host_rank(

@@ -35,7 +35,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 # persisted per-round mappings awaiting release (repo-wide convention:
-# politeness.release_rank_cache / dedupe.release_dedupe_cache)
+# dedupe.release_dedupe_cache / similarity.release_similarity_cache)
 _redirect_cache: list[DataFrame] = []
 
 

@@ -34,8 +34,8 @@ from ..functions.text import idiv, tokens
 
 # Persisted intermediate frames (minhash_dedup_pairs' signatures and
 # candidate pairs), releasable by callers once downstream outputs are
-# materialized — same pattern as politeness.release_rank_cache /
-# dedupe.release_dedupe_cache.
+# materialized — same pattern as dedupe.release_dedupe_cache /
+# redirects.release_redirect_cache.
 _sim_cache: list[DataFrame] = []
 
 

@@ -138,10 +138,9 @@ def write_window_index_bucketed(
     w: int | None = None,
 ) -> None:
     """Persist the window-hash index bucketed+sorted by ``whash`` so
-    steady-state probes never shuffle the index side (the same posture
-    as ``plans/bucketed_seen``: bucket count is a table property sized
-    to the data — 10^10 windows / 4096 buckets ~ 2.4M hashes each —
-    not the cluster size).  ``saveAsTable`` is required: bucket
+    steady-state probes never shuffle the index side (bucket count is
+    a table property sized to the data — 10^10 windows / 4096 buckets
+    ~ 2.4M hashes each — not the cluster size).  ``saveAsTable`` is required: bucket
     metadata lives in the catalog, a plain parquet path write loses
     the spec.
 

@@ -26,7 +26,7 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..operators.politeness import politeness_gate, release_rank_cache
+from ..operators.politeness import politeness_gate
 from .ledger import build_download_ledger
 from .object_store import run_download_cycle
 from .snapshots import SnapshotStore
@@ -87,7 +87,6 @@ def run_podcast_pipeline(
     while cycles < max_download_cycles:
         now, later = claim_with_politeness(ledger, download_budget_per_host)
         if now.limit(1).count() == 0:
-            release_rank_cache()
             break
         # Rows beyond this cycle's host budget are withheld from the
         # cycle's claimable input (still status-0) but ride along as
@@ -105,7 +104,6 @@ def run_podcast_pipeline(
         all_outcomes = (
             outcomes if all_outcomes is None else all_outcomes.unionByName(outcomes)
         )
-        release_rank_cache()
         cycles += 1
 
     if all_outcomes is None:

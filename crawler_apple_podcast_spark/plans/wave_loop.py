@@ -39,7 +39,6 @@ from ..operators.politeness import (
     pacing_carry_update,
     parse_robots,
     politeness_gate,
-    release_rank_cache,
 )
 from ..operators.retry import due_retries, schedule_retries
 from ..operators.traps import detect_url_traps, trap_gate
@@ -183,8 +182,25 @@ def run_crawl(
     """
     cfg = cfg or WaveConfig()
     fetcher = fetcher or make_join_fetcher(pages)
-
     robots = parse_robots(pages).cache() if (cfg.use_politeness or cfg.use_robots_disallow) else None
+    try:
+        return _crawl_waves(spark, seeds, cfg, store, resume, fetcher, robots)
+    finally:
+        # Released however the crawl ends; the outputs are checkpointed
+        # or read back from the store, so none needs the cached robots.
+        if robots is not None:
+            robots.unpersist()
+
+
+def _crawl_waves(
+    spark: SparkSession,
+    seeds: DataFrame,
+    cfg: WaveConfig,
+    store: SnapshotStore | None,
+    resume: bool,
+    fetcher,
+    robots: DataFrame | None,
+) -> CrawlOutputs:
     budgets = (
         host_budgets(robots, cfg.wave_seconds, cfg.default_crawl_delay)
         if cfg.use_politeness and robots is not None
@@ -362,9 +378,6 @@ def run_crawl(
         episodes_parts.append(eps)
         metrics_parts.append(metrics)
         fetchlog_parts.append(fetch_log)
-        # wave outputs are materialized (checkpoint or snapshot) — the
-        # politeness gate's cached rank intermediates can go.
-        release_rank_cache()
         wave += 1
 
     def _union(parts: list[DataFrame], schema: str) -> DataFrame:

@@ -96,12 +96,10 @@ def main() -> int:
             # operators persist their (eager) result frames into module
             # registries for the caller to release after materializing.
             from crawler_apple_podcast_spark.operators.dedupe import release_dedupe_cache
-            from crawler_apple_podcast_spark.operators.politeness import release_rank_cache
             from crawler_apple_podcast_spark.operators.similarity import release_similarity_cache
 
             release_similarity_cache()
             release_dedupe_cache()
-            release_rank_cache()
         if name not in oracles:
             print(f"ok   {name}: rows-only ({len(srows)} rows)")
             continue

@@ -27,11 +27,6 @@ def test_no_false_negatives(spark):
 
 
 def test_gated_anti_join_equals_exact(spark):
-    from crawler_apple_podcast_spark.operators.bloom import (
-        build_bloom_shard_rows,
-        partitioned_bloom_anti_join,
-    )
-
     # Seen keys repeated up to three times: no confirm pre-aggregates
     # the seen side, and an anti-join must not need it to.
     seen = (
@@ -47,9 +42,6 @@ def test_gated_anti_join_equals_exact(spark):
     for confirm_on in ("key", "hashes"):
         got = bloom_gated_anti_join(new, seen, bloom, confirm_on=confirm_on)
         assert sorted(r.url for r in got.collect()) == want, confirm_on
-    rows, m = build_bloom_shard_rows(seen, n_shards=4, m_bits=1 << 10, k=3)
-    got = partitioned_bloom_anti_join(new, seen, rows, m, 3, 4)
-    assert sorted(r.url for r in got.collect()) == want
 
 
 def test_fpp_reasonable(spark):
@@ -63,57 +55,9 @@ def test_fpp_reasonable(spark):
 def test_shard_rows_roundtrip(spark):
     seen = _urls(spark, 100, "seen")
     bloom = build_bloom_shards(seen, n_shards=4, m_bits=1 << 12, k=4)
-    rows = bloom.to_rows()
-    assert len(rows) <= 4
-    assert all(len(bits) == (1 << 12) // 8 for _, bits, _ in rows)
-
-
-def test_partitioned_probe_no_false_negatives(spark):
-    from crawler_apple_podcast_spark.operators.bloom import (
-        build_bloom_shard_rows,
-        partitioned_probe_bloom,
-    )
-
-    seen = _urls(spark, 500, "seen")
-    rows, m = build_bloom_shard_rows(seen, n_shards=8, m_bits=1 << 14, k=5)
-    probed = partitioned_probe_bloom(seen, rows, m, 5, 8)
-    assert probed.where(~F.col("maybe_seen")).count() == 0
-
-
-def test_partitioned_anti_join_equals_exact_and_broadcast(spark):
-    """The 10^10 path (co-grouped shard probe, no driver assembly, no
-    broadcast) returns exactly the exact anti-join, including with a
-    deliberately tiny (FP-heavy) filter and empty shards."""
-    from crawler_apple_podcast_spark.operators.bloom import (
-        build_bloom_shard_rows,
-        partitioned_bloom_anti_join,
-    )
-
-    seen = _urls(spark, 400, "seen")
-    new = _urls(spark, 300, "seen").unionAll(_urls(spark, 200, "new"))
-    rows, m = build_bloom_shard_rows(seen, n_shards=16, m_bits=1 << 10, k=3)
-    got = sorted(
-        r.url for r in partitioned_bloom_anti_join(new, seen, rows, m, 3, 16).collect()
-    )
-    want = sorted(r.url for r in new.join(seen, "url", "left_anti").collect())
-    assert got == want and len(got) == 200
-    bloom = build_bloom_shards(seen, n_shards=16, m_bits=1 << 10, k=3)
-    bc = sorted(r.url for r in bloom_gated_anti_join(new, seen, bloom).collect())
-    assert bc == got
-
-
-def test_partitioned_probe_preserves_extra_columns(spark):
-    from crawler_apple_podcast_spark.operators.bloom import (
-        build_bloom_shard_rows,
-        partitioned_probe_bloom,
-    )
-
-    seen = _urls(spark, 50, "seen")
-    new = _urls(spark, 30, "new").withColumn("priority", F.pmod(F.xxhash64("url"), F.lit(5)))
-    rows, m = build_bloom_shard_rows(seen, n_shards=4, m_bits=1 << 13, k=4)
-    probed = partitioned_probe_bloom(new, rows, m, 4, 4)
-    assert set(probed.columns) == {"url", "priority", "maybe_seen"}
-    assert probed.count() == 30
+    assert bloom.n_items == 100
+    assert set(bloom.shards) <= {0, 1, 2, 3}
+    assert all(len(bits) == (1 << 12) // 8 for bits in bloom.shards.values())
 
 
 def test_gated_anti_join_hash_confirm_equals_exact(spark):
@@ -156,11 +100,20 @@ def test_hash_confirm_keeps_null_keys(spark):
     bloom = build_bloom_shards(
         seen.where(F.col("url").isNotNull()), n_shards=4, m_bits=1 << 10, k=3
     )
-    for mode in ("urls", "hashes"):
+    for mode in ("key", "hashes"):
         got = bloom_gated_anti_join(new, seen, bloom, confirm_on=mode).collect()
         urls = [r.url for r in got]
         assert urls.count(None) == 2, mode  # both NULL candidates kept
         assert len(urls) == 22, mode        # 20 new + 2 NULL
+
+
+def test_confirm_on_rejects_unknown_mode(spark):
+    import pytest
+
+    seen = _urls(spark, 10, "seen")
+    bloom = build_bloom_shards(seen, n_shards=2, m_bits=1 << 8, k=3)
+    with pytest.raises(ValueError, match="confirm_on"):
+        bloom_gated_anti_join(seen, seen, bloom, confirm_on="urls")
 
 
 # ------------------------------------------------ property: arbitrary keys
@@ -188,7 +141,7 @@ def test_bloom_gate_equals_exact_on_arbitrary_keys(spark, cand, seen):
     )
     bloom = build_bloom_shards(sdf.where(F.col("url").isNotNull()),
                                n_shards=2, m_bits=1 << 8, k=3)
-    for mode in ("keys", "hashes"):
+    for mode in ("key", "hashes"):
         got = sorted(
             (r.url or "")
             for r in bloom_gated_anti_join(cdf, sdf, bloom, confirm_on=mode).collect()

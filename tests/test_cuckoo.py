@@ -34,7 +34,13 @@ def test_no_false_negatives_and_bounded_fpp(spark):
 
 def test_gated_anti_join_equals_exact(spark):
     cand = _urls(spark, 0, 15_000)
-    seen = _urls(spark, 0, 15_000).where(F.expr("url like '%/p/1%'"))
+    # Seen keys repeated up to three times: the confirm does not
+    # pre-aggregate the seen side, and an anti-join must not need it to.
+    seen = (
+        _urls(spark, 0, 15_000).where(F.expr("url like '%/p/1%'"))
+        .unionAll(_urls(spark, 0, 5_000).where(F.expr("url like '%/p/1%'")))
+        .unionAll(_urls(spark, 0, 2_000).where(F.expr("url like '%/p/1%'")))
+    )
     filt = CK.build_cuckoo_shards(seen, n_shards=8, expected_items=6_000)
     got = CK.cuckoo_gated_anti_join(cand, seen, filt).collect()
     want = cand.join(seen, "url", "left_anti").collect()

@@ -1,4 +1,4 @@
-"""parallel_host_rank must equal the single-window row_number rank.
+"""hash_bucketed_host_rank must equal the single-window row_number rank.
 
 The operator exists so the skewed host never lands in one task; these
 tests pin its EXACTNESS against the naive window formulation, which is
@@ -12,85 +12,37 @@ import random
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from crawler_apple_podcast_spark.operators.politeness import (
-    hash_bucketed_host_rank,
-    parallel_host_rank,
-)
-
-
-def _window_rank(df, host_col, order_cols):
-    w = Window.partitionBy(host_col).orderBy(*order_cols)
-    return df.withColumn("_rn_ref", F.row_number().over(w))
-
-
-def _assert_equal_ranks(df, host_col, order_cols):
-    got = parallel_host_rank(df, host_col, order_cols, out_col="_rn")
-    ref = _window_rank(df, host_col, order_cols)
-    a = {tuple(r): r["_rn"] for r in got.select(host_col, "k", "_rn").collect()}
-    b = {tuple(r): r["_rn_ref"] for r in ref.select(host_col, "k", "_rn_ref").collect()}
-    assert {k[:2] for k in a} == {k[:2] for k in b}
-    ga = {k[:2]: v for k, v in a.items()}
-    gb = {k[:2]: v for k, v in b.items()}
-    assert ga == gb
-
-
-def test_rank_matches_window_random(spark):
-    rng = random.Random(42)
-    rows = [
-        (f"h{rng.randint(0, 5)}", rng.randint(0, 3), f"k{i}")
-        for i in range(500)
-    ]
-    df = spark.createDataFrame(rows, "host STRING, pri INT, k STRING").repartition(13)
-    _assert_equal_ranks(df, "host", [F.col("pri"), F.col("k")])
-
-
-def test_rank_skewed_single_host(spark):
-    rows = [("hot.example", i % 3, f"k{i}") for i in range(400)] + [
-        ("cold.example", 0, "kx")
-    ]
-    df = spark.createDataFrame(rows, "host STRING, pri INT, k STRING").repartition(7)
-    _assert_equal_ranks(df, "host", [F.col("pri"), F.col("k")])
-
-
-def test_rank_empty_input(spark):
-    df = spark.createDataFrame([], "host STRING, pri INT, k STRING")
-    got = parallel_host_rank(df, "host", [F.col("pri"), F.col("k")])
-    assert got.count() == 0
-
-
-def test_rank_more_partitions_than_rows(spark):
-    df = spark.createDataFrame(
-        [("a", 1, "x"), ("a", 0, "y"), ("b", 2, "z")],
-        "host STRING, pri INT, k STRING",
-    )
-    got = parallel_host_rank(df, "host", [F.col("pri"), F.col("k")], num_partitions=32)
-    by = {(r["host"], r["k"]): r["_rn"] for r in got.collect()}
-    assert by[("a", "y")] == 1 and by[("a", "x")] == 2 and by[("b", "z")] == 1
+from crawler_apple_podcast_spark.operators.politeness import hash_bucketed_host_rank
 
 
 def test_hash_bucketed_rank_matches_window(spark):
     """The sampling-free rank (order-aligned hash-prefix salt) equals
     the naive window rank, including negative hash values that straddle
-    the signed bucket boundary and a 90%-skewed host."""
+    the signed bucket boundary and a 90%-skewed host — and on empty
+    input and with more buckets than rows."""
     rng = random.Random(7)
-    rows = [
+    skewed = [
         (("hot.example" if rng.random() < 0.9 else f"h{rng.randint(0, 20)}"),
          rng.randint(0, 3), f"u{i}")
         for i in range(2000)
     ]
-    df = (
-        spark.createDataFrame(rows, "host STRING, pri INT, url STRING")
-        .withColumn("_uh", F.xxhash64("url"))
-        .repartition(13)
-        .cache()
-    )
-    got = hash_bucketed_host_rank(df, "host", "pri", "_uh", "url", out_col="_rn")
-    w = Window.partitionBy("host").orderBy("pri", "_uh", "url")
-    ref = df.withColumn("_rn_ref", F.row_number().over(w))
-    a = {(r["host"], r["url"]): r["_rn"] for r in got.collect()}
-    b = {(r["host"], r["url"]): r["_rn_ref"] for r in ref.collect()}
-    assert a == b
-    df.unpersist()
+    tiny = [("a", 1, "x"), ("a", 0, "y"), ("b", 2, "z")]
+    for rows in (skewed, [], tiny):
+        df = (
+            spark.createDataFrame(rows, "host STRING, pri INT, url STRING")
+            .withColumn("_uh", F.xxhash64("url"))
+            .repartition(13)
+            .cache()
+        )
+        got = hash_bucketed_host_rank(
+            df, "host", "pri", "_uh", "url", out_col="_rn", n_buckets=32
+        )
+        w = Window.partitionBy("host").orderBy("pri", "_uh", "url")
+        ref = df.withColumn("_rn_ref", F.row_number().over(w))
+        a = {(r["host"], r["url"]): r["_rn"] for r in got.collect()}
+        b = {(r["host"], r["url"]): r["_rn_ref"] for r in ref.collect()}
+        assert a == b and len(a) == len(rows)
+        df.unpersist()
 
 
 def test_hash_bucketed_rank_rejects_non_pow2(spark):

@@ -70,3 +70,23 @@ def test_resume_is_noop_when_frontier_exhausted(spark, corpus, tmp_path):
     assert again.n_waves == 0
     assert store.last_committed_wave() == head
     assert first.n_waves > 0
+
+
+def _persisted_frames(spark) -> int:
+    # RDDs backing a persisted DataFrame carry a name; unnamed ones
+    # (local checkpoints) are dropped by the context cleaner, not by us.
+    return sum(
+        rdd.name() is not None
+        for rdd in spark.sparkContext._jsc.getPersistentRDDs().values()
+    )
+
+
+def test_crawl_releases_its_persisted_frames(spark, corpus, tmp_path):
+    """run_crawl caches the robots dim table for its waves and must
+    unpersist it on return, with or without a snapshot store."""
+    pages, seeds = corpus
+    for store in (None, SnapshotStore(spark, str(tmp_path / "s"))):
+        before = _persisted_frames(spark)
+        out = run_crawl(spark, pages, seeds, WaveConfig(), store=store)
+        assert out.n_waves > 0
+        assert _persisted_frames(spark) == before, store
