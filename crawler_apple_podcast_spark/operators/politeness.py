@@ -18,6 +18,16 @@ per-host rank — one shuffle of the frontier, no range-sampling pass,
 no persisted intermediate.
 
 ``deferred`` falls out as ``rank > budget`` — no anti-join needed.
+
+``politeness_rank`` returns that ranking with a boolean ``_scheduled``
+column; callers materialize it once (``localCheckpoint`` or
+``persist``) and split it with ``split_ranked``, so both halves come
+from ONE evaluation.  ``politeness_gate`` returns the same split as two
+lazy plans over an unmaterialized ranking: evaluated separately, a tie
+of equal ``(priority, url)`` rows that straddles the budget cut may be
+ordered differently in each, so a row can land in both outputs or in
+neither.  It keeps that behaviour (and its ignored ``key_cols``) until
+the benchmark that pins it changes.
 """
 
 from __future__ import annotations
@@ -110,19 +120,19 @@ def hash_bucketed_host_rank(
     return ranked.drop("_bkt", "_off")
 
 
-def politeness_gate(
+def politeness_rank(
     frontier: DataFrame,
     budgets: DataFrame | None,
     default_budget: int = 1_000_000_000,
     url_col: str = "fetch_url",
     priority_col: str = "priority",
-    key_cols: list[str] | None = None,
-) -> tuple[DataFrame, DataFrame]:
-    """Split the frontier into (scheduled, deferred) for this wave.
+) -> DataFrame:
+    """The frontier ranked per host for this wave: its columns plus a
+    boolean ``_scheduled`` (host rank within the host's budget).
 
     Deterministic order within a host: ``(priority, url_hash, url)``.
-    Both outputs keep all original frontier columns; deferred rows
-    should be unioned into the next wave's frontier.
+    Materialize the result before splitting it with ``split_ranked``
+    when both halves are used (see the module docstring).
     """
     f = frontier.withColumn("_host", host_of(F.col(url_col))).withColumn(
         "_uh", url_hash(F.col(url_col))
@@ -136,11 +146,37 @@ def politeness_gate(
     # Order-aligned hash-prefix salting: the skewed host spans many
     # window partitions, no range-sampling pass, no cached intermediate.
     ranked = hash_bucketed_host_rank(f, "_host", priority_col, "_uh", url_col)
+    return ranked.withColumn("_scheduled", F.col("_rn") <= F.col("_budget")).drop(
+        "_host", "_uh", "_budget", "_rn"
+    )
 
-    helper = ["_host", "_uh", "_budget", "_rn"]
-    scheduled = ranked.where(F.col("_rn") <= F.col("_budget")).drop(*helper)
-    deferred = ranked.where(F.col("_rn") > F.col("_budget")).drop(*helper)
-    return scheduled, deferred
+
+def split_ranked(ranked: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """``politeness_rank`` output -> (scheduled, deferred)."""
+    return (
+        ranked.where(F.col("_scheduled")).drop("_scheduled"),
+        ranked.where(~F.col("_scheduled")).drop("_scheduled"),
+    )
+
+
+def politeness_gate(
+    frontier: DataFrame,
+    budgets: DataFrame | None,
+    default_budget: int = 1_000_000_000,
+    url_col: str = "fetch_url",
+    priority_col: str = "priority",
+    key_cols: list[str] | None = None,
+) -> tuple[DataFrame, DataFrame]:
+    """Split the frontier into (scheduled, deferred) for this wave.
+
+    Both outputs keep all original frontier columns; deferred rows
+    should be unioned into the next wave's frontier.  The two are lazy
+    halves of one unmaterialized ``politeness_rank`` and ``key_cols``
+    is ignored (see the module docstring).
+    """
+    return split_ranked(
+        politeness_rank(frontier, budgets, default_budget, url_col, priority_col)
+    )
 
 
 # -------------------------------------------------- cross-wave pacing
@@ -195,7 +231,7 @@ def pacing_allowance(
     delays: DataFrame, carry: DataFrame | None, wave_ms: int
 ) -> DataFrame:
     """Per-host budget for THIS wave under rate pacing: (host, budget).
-    Plugs straight into ``politeness_gate``'s ``budgets`` argument."""
+    Plugs straight into ``politeness_rank``'s ``budgets`` argument."""
     c = _with_credit(delays, carry, wave_ms)
     return c.select(
         "host",

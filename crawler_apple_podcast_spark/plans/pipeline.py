@@ -14,7 +14,7 @@ k4_download_ledger, the object-store lifecycle tests).
 Download politeness: the reference sleeps 20-30 s between asset
 downloads (handler/apple_podcast_api.py:167, 172).  At cluster scale
 that becomes a per-asset-host budget per cycle — the same
-``politeness_gate`` the frontier uses, applied to the claim step — so
+``politeness_rank`` the frontier uses, applied to the claim step — so
 one asset CDN is never hammered by a thousand executors at once;
 unclaimed rows stay status-0 for the next cycle.
 """
@@ -26,7 +26,7 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..operators.politeness import politeness_gate
+from ..operators.politeness import politeness_rank, split_ranked
 from .ledger import build_download_ledger
 from .object_store import run_download_cycle
 from .snapshots import SnapshotStore
@@ -47,12 +47,19 @@ def claim_with_politeness(
 ) -> tuple[DataFrame, DataFrame]:
     """Split claimable ledger rows into (this_cycle, later) with at most
     ``per_host_budget`` rows per asset host — the distributed analog of
-    the reference's 20-30 s inter-download sleep."""
+    the reference's 20-30 s inter-download sleep.
+
+    The ranking is checkpointed before the split, so a tie of rows
+    sharing one ``url_col`` value at the budget cut is decided once:
+    every claimable row is in exactly one half, however often each
+    half is evaluated."""
     claimable = ledger.where(
         (F.col("status") == STATUS_INIT) & (F.col("lock") == 0)
     ).withColumn("priority", F.lit(0))
-    now, later = politeness_gate(
-        claimable, None, default_budget=per_host_budget, url_col=url_col
+    now, later = split_ranked(
+        politeness_rank(
+            claimable, None, default_budget=per_host_budget, url_col=url_col
+        ).localCheckpoint()
     )
     return now.drop("priority"), later.drop("priority")
 

@@ -7,8 +7,15 @@ with PySpark 4.1.2), so the same contract is provided behind a small
 storage interface with a parquet + manifest-JSON backend:
 
     <root>/<table>/wave=<N>/...parquet      (data files)
-    <root>/_manifests/<table>-<N>.json      (commit record)
+    <root>/_manifests/wave-<N>.json         (commit record)
     <root>/_manifests/HEAD.json             (atomically renamed last)
+
+The commit record maps each table to ``{"path", "schema"}``, where
+``schema`` is the ``df.schema.json()`` the wave was written with.
+Readers pass it to the parquet reader, so reading a committed wave back
+starts no schema-inference job.  A record without ``schema`` (written
+before it was recorded) or a table whose waves differ in schema is read
+by inference.
 
 A wave is committed iff HEAD points at it; data written for a wave that
 never reached HEAD is invisible to readers, so a killed job resumes
@@ -26,6 +33,7 @@ import time
 from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 
 class SnapshotStore:
@@ -57,7 +65,7 @@ class SnapshotStore:
         for name, df in tables.items():
             path = self._data_dir(name, wave)
             df.write.mode("overwrite").parquet(path)
-            summary["tables"][name] = {"path": path}
+            summary["tables"][name] = {"path": path, "schema": df.schema.json()}
         summary["metrics"] = metrics or {}
         summary["parent_wave"] = wave - 1 if wave > 0 else None
 
@@ -83,8 +91,18 @@ class SnapshotStore:
         with open(os.path.join(self._mdir(), f"wave-{wave}.json")) as f:
             return json.load(f)
 
+    def _read(self, paths: list[str], schema: str | None) -> DataFrame:
+        reader = self.spark.read
+        if schema is not None:
+            reader = reader.schema(StructType.fromJson(json.loads(schema)))
+        return reader.parquet(*paths)
+
     def read_wave(self, table: str, wave: int) -> DataFrame:
-        return self.spark.read.parquet(self._data_dir(table, wave))
+        try:
+            entry = self.manifest(wave)["tables"].get(table, {})
+        except FileNotFoundError:
+            entry = {}
+        return self._read([self._data_dir(table, wave)], entry.get("schema"))
 
     def read_table(self, table: str, up_to_wave: int | None = None) -> DataFrame:
         """Union of all committed wave partitions of ``table`` (the
@@ -93,14 +111,16 @@ class SnapshotStore:
         if head is None:
             raise FileNotFoundError("no committed wave")
         last = head if up_to_wave is None else min(head, up_to_wave)
-        paths = []
-        for w in range(last + 1):
-            m = self.manifest(w)
-            if table in m["tables"]:
-                paths.append(m["tables"][table]["path"])
-        if not paths:
+        entries = [
+            m["tables"][table]
+            for m in (self.manifest(w) for w in range(last + 1))
+            if table in m["tables"]
+        ]
+        if not entries:
             raise FileNotFoundError(f"table {table} has no committed waves")
-        return self.spark.read.parquet(*paths)
+        schemas = {e.get("schema") for e in entries}
+        schema = schemas.pop() if len(schemas) == 1 else None
+        return self._read([e["path"] for e in entries], schema)
 
     def lineage(self) -> list[dict[str, Any]]:
         """Manifest chain from wave 0 to HEAD (per-wave metrics included)."""

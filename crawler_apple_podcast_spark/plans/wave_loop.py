@@ -15,8 +15,14 @@ Scale shape per wave (1000-executor reading 100 TB):
   broadcast side; the pages table is streamed, never shuffled;
 - a missed fetch is an anti-join of the (broadcast) wave against the
   (broadcast) hit set — no big-table shuffle anywhere;
+- the politeness ranking runs ONCE per wave: it is localCheckpointed
+  and split, so the fetch, the next frontier, the status delta and the
+  rate-pacing counts all read one ranking (two lazy evaluations could
+  split a tie at the budget cut differently, losing or duplicating a
+  fetch);
 - per-wave state is truncated via localCheckpoint / snapshot read-back,
-  so the logical plan does not grow with wave count;
+  so the logical plan does not grow with wave count; read-backs carry
+  the schema recorded at commit, so none starts a schema-inference job;
 - every wave commits atomically through ``SnapshotStore`` with
   per-host counters in the manifest (kill -> resume from HEAD).
 """
@@ -38,7 +44,8 @@ from ..operators.politeness import (
     pacing_allowance,
     pacing_carry_update,
     parse_robots,
-    politeness_gate,
+    politeness_rank,
+    split_ranked,
 )
 from ..operators.retry import due_retries, schedule_retries
 from ..operators.traps import detect_url_traps, trap_gate
@@ -260,11 +267,10 @@ def _crawl_waves(
                 if pace_delays is not None
                 else budgets
             )
-            scheduled, deferred = politeness_gate(
-                f,
-                wave_budgets,
-                default_budget=cfg.default_budget,
-                key_cols=["seed_index", "fetch_url"],
+            scheduled, deferred = split_ranked(
+                politeness_rank(
+                    f, wave_budgets, default_budget=cfg.default_budget
+                ).localCheckpoint()
             )
             if pace_delays is not None:
                 counts = (

@@ -20,9 +20,10 @@ Design
   duplicates — exactly-once downstream given the checkpointed source
   offsets.
 - The batch plan is evaluated once: the confirmed ``fresh`` frame and
-  both gate outputs are persisted for the batch, every write and the
-  optional snapshot commit (data and counts) read those cached frames,
-  and all of them are released when the batch ends.
+  its politeness ranking are persisted for the batch, every write and
+  the optional snapshot commit (data and counts) read the two gate
+  outputs split from that cached ranking, and all of them are released
+  when the batch ends.
 - Watermarked windowed aggregation (``host_rate_metrics``) gives
   per-host scheduling-rate observability with bounded state; late
   discoveries beyond the watermark are dropped from metrics only,
@@ -41,7 +42,7 @@ from pyspark.sql.types import StructType
 
 from ..functions.urls import canonicalize_url, host_of
 from ..operators.bloom import BloomShards, build_bloom_shards, bloom_gated_anti_join
-from ..operators.politeness import politeness_gate
+from ..operators.politeness import politeness_rank, split_ranked
 
 CANDIDATE_SCHEMA = "url STRING, priority INT, discovered_ts TIMESTAMP"
 # Given to every read of the seen dirs, so no read starts a
@@ -202,14 +203,13 @@ def process_candidate_batch(
             recent = recent.unionByName(p)
         fresh = fresh.join(recent, "fetch_url", "left_anti")
 
-    # Cached so the gate's two outputs, the three writes and the
-    # snapshot commit share one run of canonicalize → probe → confirm.
+    # Cached so the ranking's two reads of ``fresh`` share one run of
+    # canonicalize → probe → confirm, and the ranking itself once so
+    # the three writes and the snapshot commit split ONE evaluation.
     fresh = fresh.persist()
-    scheduled, deferred = politeness_gate(
-        fresh, None, default_budget=cfg.default_budget
-    )
-    scheduled, deferred = scheduled.persist(), deferred.persist()
-    batch_caches.extend([fresh, scheduled, deferred])
+    ranked = politeness_rank(fresh, None, default_budget=cfg.default_budget).persist()
+    scheduled, deferred = split_ranked(ranked)
+    batch_caches.extend([fresh, ranked])
     # Idempotent per-batch dirs: a replayed batch overwrites its own
     # output instead of appending a duplicate; the dir name doubles as
     # a hive-style `batch_id` partition column on read.
@@ -255,7 +255,7 @@ def process_candidate_batch(
             )
 
     # Outputs are on disk — release this batch's cached frames (probed,
-    # fresh, scheduled, deferred); a long-running stream must not
+    # fresh, ranked); a long-running stream must not
     # accumulate storage memory per batch.
     for df in batch_caches:
         df.unpersist()

@@ -1,5 +1,7 @@
 from __future__ import annotations
 
+from contextlib import contextmanager
+
 import pytest
 
 from crawler_apple_podcast_spark.datagen import CorpusParams, generate_corpus
@@ -24,3 +26,20 @@ def corpus(spark, corpus_pdfs):
     pages, seeds = to_spark(spark, pages_pdf, seeds_pdf)
     pages.cache().count()
     return pages, seeds
+
+
+@pytest.fixture
+def job_group(spark):
+    """``with job_group(name) as jobs:`` runs the block under the Spark
+    job group ``name``; ``jobs()`` counts the jobs started in it so far."""
+    sc = spark.sparkContext
+
+    @contextmanager
+    def group(name):
+        sc.setJobGroup(name, name)
+        try:
+            yield lambda: len(sc.statusTracker().getJobIdsForGroup(name))
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+
+    return group

@@ -10,7 +10,10 @@ import pytest
 from pyspark.sql import functions as F
 
 from crawler_apple_podcast_spark.plans.object_store import deterministic_fake_fetch
-from crawler_apple_podcast_spark.plans.pipeline import run_podcast_pipeline
+from crawler_apple_podcast_spark.plans.pipeline import (
+    claim_with_politeness,
+    run_podcast_pipeline,
+)
 from crawler_apple_podcast_spark.plans.wave_loop import WaveConfig
 
 
@@ -45,6 +48,28 @@ def test_pipeline_download_budget_spreads_cycles(spark, corpus, tmp_path):
     assert out.n_cycles > 1
     assert out.outcomes.count() == n_eps  # each asset uploaded exactly once
     assert out.ledger.where("status <> 3").count() == 0
+
+
+def test_claims_split_a_tied_asset_url_once(spark):
+    """Forty claimable ids share one asset URL and the host budget cuts
+    inside that tie: each claim puts every claimable id in exactly one
+    of ``now`` and ``later``, and re-evaluating a half changes nothing."""
+    host = "https://cdn.example"
+    rows = [(f"t{i}", f"{host}/shared.mp3", 0, 0) for i in range(40)]
+    rows += [(f"u{i}", f"{host}/own{i}.mp3", 0, 0) for i in range(20)]
+    rows += [("done", f"{host}/shared.mp3", 3, 0), ("locked", f"{host}/x.mp3", 0, 1)]
+    ledger = spark.createDataFrame(
+        rows, "id STRING, asset_url STRING, status INT, lock INT"
+    ).repartition(4).localCheckpoint()
+    claimable = sorted(r[0] for r in rows if r[2] == 0 and r[3] == 0)
+    for _ in range(5):
+        now, later = claim_with_politeness(ledger, 25)
+        ids_now = sorted(r.id for r in now.collect())
+        ids_later = sorted(r.id for r in later.collect())
+        assert len(ids_now) == 25
+        assert sorted(ids_now + ids_later) == claimable
+        assert sorted(r.id for r in now.collect()) == ids_now
+        assert sorted(r.id for r in later.collect()) == ids_later
 
 
 def test_iceberg_binding_refuses_without_catalog(spark):

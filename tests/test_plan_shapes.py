@@ -316,3 +316,22 @@ def test_incremental_cc_committed_table_never_shuffles(spark, tmp_path, monkeypa
         assert "SortMergeJoin" not in p, p
         assert "Exchange hashpartitioning" not in p, p
         assert "BroadcastHashJoin" in p, p
+
+
+@pytest.mark.parametrize("wave_seconds", [3600, 20])
+def test_wave_loop_jobs_per_wave(spark, corpus, tmp_path, job_group, wave_seconds):
+    """Each wave ranks its frontier once (one local checkpoint split into
+    scheduled and deferred) and reads its commit back with the recorded
+    schemas, so a wave stays near 22 Spark jobs; ranking lazily per use
+    and inferring each read-back's schema cost 46-50.  ``wave_seconds``
+    20 makes waves defer."""
+    from crawler_apple_podcast_spark.plans.snapshots import SnapshotStore
+    from crawler_apple_podcast_spark.plans.wave_loop import WaveConfig, run_crawl
+
+    pages, seeds = corpus
+    store = SnapshotStore(spark, str(tmp_path / "snap"))
+    with job_group(f"crawl-{wave_seconds}") as jobs:
+        out = run_crawl(spark, pages, seeds, WaveConfig(wave_seconds=wave_seconds), store=store)
+        n = jobs()
+    assert out.n_waves > 0
+    assert n <= 30 * out.n_waves, (n, out.n_waves)

@@ -3,6 +3,9 @@ from the last committed frontier snapshot with identical results)."""
 
 from __future__ import annotations
 
+import json
+import os
+
 from pyspark.sql import functions as F
 
 from crawler_apple_podcast_spark.plans.snapshots import SnapshotStore
@@ -18,6 +21,51 @@ def test_commit_and_read_back(spark, tmp_path):
     assert store.read_table("t").count() == 2
     assert store.read_wave("t", 1).collect()[0].k == 2
     assert [m["wave"] for m in store.lineage()] == [0, 1]
+
+
+def test_reads_carry_the_committed_schema(spark, tmp_path, job_group):
+    """Read-backs pass the schema recorded at commit, so neither reader
+    starts a schema-inference job before an action."""
+    store = SnapshotStore(spark, str(tmp_path / "snap"))
+    df = spark.createDataFrame([(1, "a", [2.5])], "k INT, v STRING, xs ARRAY<DOUBLE>")
+    store.commit_wave(0, {"t": df})
+    store.commit_wave(1, {"t": df})
+    assert store.manifest(1)["tables"]["t"]["schema"] == df.schema.json()
+    with job_group("snapshot-read-back") as jobs:
+        one = store.read_wave("t", 1)
+        both = store.read_table("t")
+        assert jobs() == 0
+    assert one.schema.simpleString() == both.schema.simpleString() == df.schema.simpleString()
+    assert one.collect() == df.collect()
+    assert both.collect() == df.collect() * 2
+
+
+def test_read_table_infers_when_wave_schemas_differ(spark, tmp_path):
+    """Wave 1 of ``test_commit_and_read_back``'s table has a non-nullable
+    ``k``: the recorded schemas differ, so ``read_table`` infers."""
+    store = SnapshotStore(spark, str(tmp_path / "snap"))
+    df = spark.createDataFrame([(1, "a")], "k INT, v STRING")
+    store.commit_wave(0, {"t": df})
+    store.commit_wave(1, {"t": df.withColumn("k", F.lit(2))})
+    schemas = {store.manifest(w)["tables"]["t"]["schema"] for w in (0, 1)}
+    assert len(schemas) == 2
+    assert sorted(r.k for r in store.read_table("t").collect()) == [1, 2]
+
+
+def test_manifest_without_schema_reads_by_inference(spark, tmp_path):
+    """A manifest written before schemas were recorded still reads."""
+    store = SnapshotStore(spark, str(tmp_path / "snap"))
+    df = spark.createDataFrame([(1, "a"), (2, "b")], "k INT, v STRING")
+    store.commit_wave(0, {"t": df})
+    store.commit_wave(1, {"t": df})
+    for w in (0, 1):
+        path = os.path.join(store.root, "_manifests", f"wave-{w}.json")
+        m = store.manifest(w)
+        del m["tables"]["t"]["schema"]
+        with open(path, "w") as f:
+            json.dump(m, f)
+    assert sorted(store.read_wave("t", 1).collect()) == sorted(df.collect())
+    assert store.read_table("t").count() == 4
 
 
 def test_uncommitted_wave_invisible(spark, tmp_path):
