@@ -18,6 +18,7 @@ Env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1),
 
 from __future__ import annotations
 
+import gc
 import json
 import os
 import sys
@@ -33,8 +34,6 @@ from crawler_apple_podcast_spark.functions.urls import canonicalize_url
 from crawler_apple_podcast_spark.operators.bloom import build_bloom_shards, bloom_gated_anti_join
 from crawler_apple_podcast_spark.operators.politeness import politeness_gate
 from crawler_apple_podcast_spark.operators import similarity as S
-from crawler_apple_podcast_spark.operators.dedupe import release_dedupe_cache
-from crawler_apple_podcast_spark.operators.redirects import release_redirect_cache
 from crawler_apple_podcast_spark.session import get_spark
 import crawler_apple_podcast_spark.queries as catalog
 
@@ -110,16 +109,15 @@ HEADLINE = [
 
 
 def release_all_caches(spark) -> None:
-    """Steady-state semantics between timed runs: drain every module
-    cache registry (similarity signatures/candidates, dedupe estar
-    frames, redirect mappings) and drop all storage blocks.
-    Without this, repeated headline reps accumulate persisted frames
+    """Steady-state semantics between timed runs: drop the session
+    cache, then collect garbage on both sides of the py4j bridge so the
+    context cleaner drops the local checkpoints nothing references.
+    Without this, repeated headline reps accumulate materialized frames
     and later queries inherit the churn (VERDICT r3: d1's spread rose
     monotonically 1.78 -> 4.85 across reps)."""
-    S.release_similarity_cache()
-    release_dedupe_cache()
-    release_redirect_cache()
     spark.catalog.clearCache()
+    gc.collect()
+    spark.sparkContext._jvm.System.gc()
 
 
 def warmup(spark, sf_dir: str) -> None:
@@ -260,9 +258,7 @@ def bench_dedup_scale(spark, n_docs: int, group: int = 10_000) -> dict:
     # A long bench session leaves JVM old-gen + Python-worker pressure
     # that can poison this leg (measured 13 s -> 107 s for the SAME
     # minhash run after a full headline suite); start it clean.
-    spark.catalog.clearCache()
-    S.release_similarity_cache()
-    spark.sparkContext._jvm.System.gc()
+    release_all_caches(spark)
     docs = synth_docs(spark, n_docs, group=group)
     lsh_s, n_lsh = float("inf"), 0
     for _ in range(2):  # cheap leg: best-of-2 rides out VM stalls
@@ -270,7 +266,6 @@ def bench_dedup_scale(spark, n_docs: int, group: int = 10_000) -> dict:
         n_lsh = S.minhash_dedup_pairs(docs, "doc_id", "text", 3, 500).count()
         lsh_s = min(lsh_s, time.time() - t0)
         spark.catalog.clearCache()
-        S.release_similarity_cache()
     t0 = time.time()
     n_exact = S.jaccard_pairs(S.shingle_rows(docs, "doc_id", "text", 3), 500).count()
     exact_s = time.time() - t0
@@ -297,7 +292,6 @@ def bench_lsh_megacluster(spark, n_docs: int = 100_000, cluster_k: int = 10_000)
     k-1 star pairs).  Connectivity (one component either way) is the
     pytest contract (test_lsh_bucket_cap_star_pairs_mega_cluster)."""
     spark.catalog.clearCache()
-    S.release_similarity_cache()
     base = spark.range(n_docs)
     body = F.concat_ws(
         " ", *[F.concat(F.lit(f"u{j}d"), F.col("id").cast("string")) for j in range(12)]
@@ -312,7 +306,6 @@ def bench_lsh_megacluster(spark, n_docs: int = 100_000, cluster_k: int = 10_000)
     n_pairs = S.minhash_dedup_pairs(docs, "doc_id", "text", 3, 500).count()
     capped_s = time.time() - t0
     spark.catalog.clearCache()
-    S.release_similarity_cache()
 
     sig = S.minhash_signatures_from_hashes(
         S.shingle_hashes(docs, "doc_id", "text", 3), 36

@@ -116,7 +116,6 @@ def resolve_canonical(
     url_col: str = "url",
     html_col: str = "html",
     max_hops: int = 8,
-    cache_registry: list[DataFrame] | None = None,
 ) -> DataFrame:
     """(src_url, final_url, hops, status) for every alias-declaring
     page: the canonical chain's terminal URL, or ``truncated`` for
@@ -126,5 +125,4 @@ def resolve_canonical(
         src_col="src_url",
         dst_col="dst_url",
         max_hops=max_hops,
-        cache_registry=cache_registry,
     )

@@ -108,15 +108,12 @@ def semantic_dedup(
     q = embeddings.select(
         F.col(id_col), _quantized(vec_col).alias("_qe")
     ).withColumn("_nq", _qdot(F.col("_qe"), F.col("_qe")))
-    # Both self-join sides derive from `base`; unpersisted, Spark
-    # re-runs the Arrow matmul assignment once PER SIDE (the same
-    # double-compute trap simhash_near_pairs documents).  Registered
-    # with the similarity cache so release_similarity_cache() drains it.
-    from .similarity import _sim_cache
-
-    base = assign.join(q, id_col).where(F.col("_nq") > 0).persist()
-    _sim_cache.append(base)
-    base.count()
+    # Both self-join sides derive from `base`; left lazy, Spark re-runs
+    # the Arrow matmul assignment once PER SIDE (the same double-compute
+    # trap simhash_near_pairs documents).  Local-checkpointed, it goes
+    # with the returned frame; a lost executor fails the job instead of
+    # recomputing it.
+    base = assign.join(q, id_col).where(F.col("_nq") > 0).localCheckpoint()
     a = base.select(
         F.col(id_col).alias("_va"), "cell",
         F.col("_qe").alias("_qa"), F.col("_nq").alias("_na"),

@@ -25,17 +25,12 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-# Persisted survivor frames returned by sequential_or_dedupe, so
-# long-lived sessions (seed discovery per wave) can release them once
-# the wave's outputs are materialized — same pattern as
-# similarity.release_similarity_cache / bloom's cache_registry.
-_dedupe_cache: list[DataFrame] = []
-
 
 def release_dedupe_cache() -> None:
-    """Unpersist all survivor frames cached since the last call."""
-    while _dedupe_cache:
-        _dedupe_cache.pop().unpersist()
+    """Does nothing: ``sequential_or_dedupe`` local-checkpoints its
+    survivors, and Spark drops a checkpoint once nothing references its
+    frame.  Kept because the benchmark harness (``perfbench/``) still
+    calls it."""
 
 
 def two_key_or_anti_join(
@@ -80,7 +75,6 @@ def sequential_or_dedupe(
     uid_col: str = "uid",
     ord_col: str = "ord",
     max_iters: int = 50,
-    cache_registry: list[DataFrame] | None = None,
 ) -> DataFrame:
     """Exact replay of ``SaveUrlsToDb`` batch semantics, distributed.
 
@@ -88,10 +82,11 @@ def sequential_or_dedupe(
     reference's processing order).  Returns the surviving rows with
     their original columns.
 
-    The returned frame is persisted (its lineage crosses two grouped
-    Arrow stages) and registered in ``cache_registry`` — or the module
-    registry released by :func:`release_dedupe_cache` — so callers can
-    free it after materializing downstream outputs.
+    The returned frame is local-checkpointed, because its lineage
+    crosses two grouped Arrow stages.  Its blocks go when the caller
+    drops the frame, so a session that dedupes once per wave does not
+    grow storage; a lost executor fails the job instead of recomputing
+    the survivors.
     """
     c = candidates.select(
         F.col(ord_col).cast("long").alias("ord"),
@@ -229,9 +224,7 @@ def sequential_or_dedupe(
 
     out = candidates.join(
         survivors.withColumnRenamed("ord", ord_col), ord_col, "left_semi"
-    ).persist()
-    (_dedupe_cache if cache_registry is None else cache_registry).append(out)
-    out.count()
+    ).localCheckpoint()
     for f in (c, lab_cached, s0):
         f.unpersist()
     return out

@@ -44,31 +44,15 @@ def release_rank_cache() -> None:
 
 
 def parse_robots(pages: DataFrame) -> DataFrame:
-    """robots.txt rows -> ``(host, crawl_delay, disallow)`` dim table."""
+    """robots.txt rows -> ``(host, crawl_delay)`` dim table.  Disallow
+    rules are ``operators/robots.py``'s job (RFC 9309 parsing and
+    gating)."""
     robots = pages.where(F.col("url").rlike(r"^https?://[^/]+/robots\.txt$"))
     body = F.decode(F.col("html"), "UTF-8")
     return robots.select(
         host_of(F.col("url")).alias("host"),
         F.regexp_extract(body, r"Crawl-delay:\s*([0-9]+)", 1).try_cast("int").alias("crawl_delay"),
-        F.regexp_extract(body, r"Disallow:\s*(\S+)", 1).alias("disallow"),
     )
-
-
-def filter_disallowed(frontier: DataFrame, robots: DataFrame, url_col: str = "fetch_url") -> DataFrame:
-    """Drop frontier rows whose path matches the host's Disallow prefix.
-
-    ``robots`` is tiny (one row per host) -> broadcast join.
-    """
-    f = frontier.withColumn("_host", host_of(F.col(url_col)))
-    joined = f.join(F.broadcast(robots.select("host", "disallow")),
-                    f["_host"] == robots["host"], "left")
-    path = F.parse_url(F.col(url_col), F.lit("PATH"))
-    blocked = (
-        F.col("disallow").isNotNull()
-        & (F.length("disallow") > 0)
-        & path.startswith(F.col("disallow"))
-    )
-    return joined.where(~blocked).drop("host", "disallow", "_host")
 
 
 def host_budgets(robots: DataFrame, wave_seconds: int, default_delay: int = 5) -> DataFrame:

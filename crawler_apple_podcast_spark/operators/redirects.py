@@ -16,8 +16,10 @@ v terminal or d saturated") and compose it with itself, so reach
 doubles every round — ``ceil(log2(max_hops))`` self-joins total (5
 rounds for the default 32-hop browser-style cap) regardless of how
 many million chains are in flight.  Each round is ONE shuffle of the
-mapping on the composition key; rounds are persisted eagerly and the
-previous round released, so lineage stays flat (no 2^k-deep plan).
+mapping on the composition key; each round is local-checkpointed, so
+lineage stays flat (no 2^k-deep plan) and a round's blocks go once no
+frame references it.  The trade: a lost executor fails the job instead
+of recomputing the round.
 
 Loop handling is the cap semantics real fetchers use (curl
 ``--max-redirs``, browsers ~20): a chain that has not terminated
@@ -34,16 +36,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-# persisted per-round mappings awaiting release (repo-wide convention:
-# dedupe.release_dedupe_cache / similarity.release_similarity_cache)
-_redirect_cache: list[DataFrame] = []
-
 
 def release_redirect_cache() -> None:
-    """Unpersist every frame cached by resolve_redirects calls that
-    did not supply their own registry."""
-    while _redirect_cache:
-        _redirect_cache.pop().unpersist()
+    """Does nothing: ``resolve_redirects`` local-checkpoints its
+    rounds, and Spark drops a checkpoint once nothing references its
+    frame.  Kept because the benchmark harness (``perfbench/``) still
+    calls it."""
 
 
 def resolve_redirects(
@@ -51,7 +49,6 @@ def resolve_redirects(
     src_col: str = "src_url",
     dst_col: str = "dst_url",
     max_hops: int = 32,
-    cache_registry: list[DataFrame] | None = None,
 ) -> DataFrame:
     """``(src_col, final_url, hops, status)`` for every distinct source
     in ``edges``; ``status`` is ``'resolved'`` (final_url terminal,
@@ -59,17 +56,14 @@ def resolve_redirects(
     ``max_hops``: over-long chain or cycle; final_url/hops NULL)."""
     if max_hops < 1:
         raise ValueError("max_hops must be >= 1")
-    reg = _redirect_cache if cache_registry is None else cache_registry
 
     # enforce a functional graph deterministically
     step = (
         edges.groupBy(F.col(src_col).alias("_u"))
         .agg(F.min(dst_col).alias("_v"))
         .withColumn("_d", F.lit(1).cast("long"))
+        .localCheckpoint()
     )
-    step = step.persist()
-    step.count()
-    reg.append(step)
 
     # compose until reach >= max_hops (reach doubles per round)
     cur, reach = step, 1
@@ -94,10 +88,7 @@ def resolve_redirects(
                 ).alias("_d"),
             )
         )
-        nxt = nxt.persist()
-        nxt.count()
-        reg.append(nxt)
-        cur, reach = nxt, reach * 2
+        cur, reach = nxt.localCheckpoint(), reach * 2
 
     # v is terminal iff it has no outgoing edge
     heads = step.select(F.col("_u").alias("_t"))

@@ -6,9 +6,9 @@ and fetches nothing it wasn't seeded with.  A web-scale frontier must
 honor the Robots Exclusion Protocol for arbitrary hosts, which means a
 real parser (agent groups, Allow/Disallow, ``*``/``$`` wildcards) and
 the RFC-9309 decision rule (most-specific a.k.a. longest match wins;
-Allow wins length ties).  ``operators/politeness.py:parse_robots``
-keeps the reference-shaped fast path (one Crawl-delay + one Disallow
-prefix per host); this module is the standards-compliant engine layer.
+Allow wins length ties).  This module is the engine's one Disallow
+implementation; ``operators/politeness.py:parse_robots`` reads only
+each host's Crawl-delay, for the per-wave budgets.
 
 Spark shape — everything stays in DataFrame ops:
 

@@ -32,17 +32,12 @@ from pyspark.sql import functions as F
 
 from ..functions.text import idiv, tokens
 
-# Persisted intermediate frames (minhash_dedup_pairs' signatures and
-# candidate pairs), releasable by callers once downstream outputs are
-# materialized — same pattern as dedupe.release_dedupe_cache /
-# redirects.release_redirect_cache.
-_sim_cache: list[DataFrame] = []
-
 
 def release_similarity_cache() -> None:
-    """Unpersist all similarity result frames cached since the last call."""
-    while _sim_cache:
-        _sim_cache.pop().unpersist()
+    """Does nothing: the operators here local-checkpoint what they
+    materialize, and Spark drops a checkpoint once nothing references
+    its frame.  Kept because the benchmark harness (``perfbench/``)
+    still calls it."""
 
 
 def _spread(df: DataFrame, *cols) -> DataFrame:
@@ -458,7 +453,6 @@ def minhash_dedup_pairs(
     n_hashes: int = 36,
     bands: int = 12,
     rows_per_band: int = 3,
-    cache_registry: list[DataFrame] | None = None,
     max_bucket: int = 256,
 ) -> DataFrame:
     """MinHash-LSH near-dup detection with exact confirmation: LSH only
@@ -492,27 +486,20 @@ def minhash_dedup_pairs(
     shingle-set materialization (string distinct) happens ONLY for the
     docs that appear in some LSH candidate pair — at 100 TB that is
     the near-dup fraction, not the corpus."""
-    # Persist + eager-count the two frames that are read twice (the
-    # banding self-join reads sig per side; cands feeds both the
-    # candidate-doc semi-join and the confirm join) — unpersisted they
-    # recompute their upstream per consumer, un-counted the first joint
-    # read races the cache.  Both register for release via the caller's
-    # registry / release_similarity_cache().  The RESULT stays lazy:
-    # every consumer materializes exactly once anyway, and an eager
-    # persist+count here would pay the confirm path twice.
-    reg = _sim_cache if cache_registry is None else cache_registry
+    # Materialize the two frames that are read twice (the banding
+    # self-join reads sig per side; cands feeds both the candidate-doc
+    # semi-join and the confirm join) — left lazy they recompute their
+    # upstream per consumer.  sig is released once cands exists, since
+    # the result never reads it.  cands is local-checkpointed, so it
+    # goes with the returned frame (a lost executor fails the job
+    # instead of recomputing it).  The RESULT stays lazy: every
+    # consumer materializes it once anyway, and an eager checkpoint
+    # here would pay the confirm path twice.
     sig = minhash_signatures_from_hashes(
         shingle_hashes(df, id_col, text_col, n), n_hashes
     ).persist()
     sig.count()
-    cands = lsh_candidate_pairs(sig, bands, rows_per_band, max_bucket).persist()
-    reg.append(cands)
-    cands.count()
-    # sig is fully consumed once cands is materialized (nothing in the
-    # lazy result reads it) — release it NOW instead of parking it in
-    # the registry: loop-y callers that forget to drain the registry
-    # (ADVICE r3) then leak at most the candidate frame, not the
-    # full-corpus signature scan.
+    cands = lsh_candidate_pairs(sig, bands, rows_per_band, max_bucket).localCheckpoint()
     sig.unpersist()
     return _exact_confirm(df, id_col, text_col, n, cands, threshold_milli)
 
@@ -566,7 +553,6 @@ def minhash_probe_new(
     n_hashes: int = 36,
     bands: int = 12,
     rows_per_band: int = 3,
-    cache_registry: list[DataFrame] | None = None,
     max_bucket: int = 256,
 ) -> tuple[DataFrame, DataFrame]:
     """Incremental near-dup detection for a NEW crawl batch against an
@@ -604,14 +590,16 @@ def minhash_probe_new(
     ``minhash_dedup_pairs`` never recurs), and the probe is one join
     of new buckets against the index plus one self-join within the
     batch.
+
+    The new buckets and the candidate pairs are each read twice, so
+    both are local-checkpointed: their blocks go with the frames that
+    reference them, and a lost executor fails the job instead of
+    recomputing them.
     """
-    reg = _sim_cache if cache_registry is None else cache_registry
     sig = minhash_signatures_from_hashes(
         shingle_hashes(new, id_col, text_col, n), n_hashes
     )
-    nb = lsh_band_buckets(sig, bands, rows_per_band).persist()
-    reg.append(nb)
-    nb.count()
+    nb = lsh_band_buckets(sig, bands, rows_per_band).localCheckpoint()
     a = nb.select(F.col("doc_id").alias("_na"), "band", "key")
     cross = (
         a.join(index_buckets.select(F.col("doc_id").alias("_ob"), "band", "key"), ["band", "key"])
@@ -621,9 +609,7 @@ def minhash_probe_new(
         )
     )
     within = _bucket_pairs(nb, max_bucket)
-    cands = cross.unionByName(within).distinct().persist()
-    reg.append(cands)
-    cands.count()
+    cands = cross.unionByName(within).distinct().localCheckpoint()
     pairs = _exact_confirm(corpus, id_col, text_col, n, cands, threshold_milli)
     return pairs, nb
 
@@ -758,15 +744,14 @@ def simhash_near_pairs(
             f"pigeonhole requires max_hamming < chunks, got {max_hamming} >= {chunks}"
         )
     width = 64 // chunks
-    # Persist the fingerprints before the self-join: both join sides
-    # derive from `sims`, and unpersisted Spark recomputes the whole
+    # Materialize the fingerprints before the self-join: both join
+    # sides derive from `sims`, and left lazy Spark recomputes the whole
     # token-explode + packed aggregate once PER SIDE (~2x the
     # fingerprint cost, measured 3.6 s vs 2.0 s at sf0.1).  The frame
-    # is (doc_id, long) — tiny at any corpus scale — and registers for
-    # release via release_similarity_cache().
-    sims = sims.persist()
-    _sim_cache.append(sims)
-    sims.count()
+    # is (doc_id, long) — tiny at any corpus scale — and is
+    # local-checkpointed, so it goes with the returned frame (a lost
+    # executor fails the job rather than recomputing it).
+    sims = sims.localCheckpoint()
     chunk_cols = [
         F.shiftrightunsigned(F.col("simhash"), i * width)
         .bitwiseAND(F.lit((1 << width) - 1))

@@ -38,7 +38,6 @@ from pyspark.sql import functions as F
 from ..functions import episodes as E
 from ..functions import urls as U
 from ..operators.politeness import (
-    filter_disallowed,
     host_budgets,
     host_delays,
     pacing_allowance,
@@ -51,6 +50,9 @@ from ..operators.retry import due_retries, schedule_retries
 from ..operators.traps import detect_url_traps, trap_gate
 from .snapshots import SnapshotStore
 from .status import latest_status, wave_status_delta
+
+# Crawl-delay (seconds) for hosts whose robots.txt names none.
+DEFAULT_CRAWL_DELAY = 5
 
 EPISODES_COLS = [
     "seed_index", "offset", "pos", "wave", "source_url",
@@ -68,9 +70,7 @@ class WaveConfig:
     # semantics, crawler_podcasts.py:81), instead of resetting the
     # budget every wave.  See operators/politeness.py pacing section.
     use_rate_pacing: bool = False
-    use_robots_disallow: bool = False  # reference never consults robots (quirk)
     default_budget: int = 1 << 30
-    default_crawl_delay: int = 5
     # Exponential-backoff retries of failed fetches (operators/retry.py):
     # None = off (the reference's behavior — failures are lost,
     # crawler_podcasts.py:28-30 — and the e1 parity oracles assume it);
@@ -189,7 +189,7 @@ def run_crawl(
     """
     cfg = cfg or WaveConfig()
     fetcher = fetcher or make_join_fetcher(pages)
-    robots = parse_robots(pages).cache() if (cfg.use_politeness or cfg.use_robots_disallow) else None
+    robots = parse_robots(pages).cache() if cfg.use_politeness else None
     try:
         return _crawl_waves(spark, seeds, cfg, store, resume, fetcher, robots)
     finally:
@@ -209,14 +209,14 @@ def _crawl_waves(
     robots: DataFrame | None,
 ) -> CrawlOutputs:
     budgets = (
-        host_budgets(robots, cfg.wave_seconds, cfg.default_crawl_delay)
+        host_budgets(robots, cfg.wave_seconds, DEFAULT_CRAWL_DELAY)
         if cfg.use_politeness and robots is not None
         else None
     )
     # Rate pacing: per-wave budgets derive from a carried credit
     # ledger instead of resetting each wave.
     pace_delays = (
-        host_delays(robots, cfg.default_crawl_delay * 1000).localCheckpoint()
+        host_delays(robots, DEFAULT_CRAWL_DELAY * 1000).localCheckpoint()
         if cfg.use_politeness and cfg.use_rate_pacing and robots is not None
         else None
     )
@@ -249,8 +249,6 @@ def _crawl_waves(
             break
 
         f = frontier.withColumn("fetch_url", U.normalize_fetch_url(F.col("url")))
-        if cfg.use_robots_disallow and robots is not None:
-            f = filter_disallowed(f, robots)
         if cfg.trap_min_urls is not None and trap_obs is not None:
             traps = detect_url_traps(
                 trap_obs,

@@ -7,6 +7,7 @@ Usage: python scripts/check_contract.py [sf_dir] [name ...]
 
 from __future__ import annotations
 
+import gc
 import sys
 from pathlib import Path
 
@@ -92,14 +93,12 @@ def main() -> int:
             failures += 1
             continue
         finally:
-            # Steady-state hygiene across the 50-query loop: some
-            # operators persist their (eager) result frames into module
-            # registries for the caller to release after materializing.
-            from crawler_apple_podcast_spark.operators.dedupe import release_dedupe_cache
-            from crawler_apple_podcast_spark.operators.similarity import release_similarity_cache
-
-            release_similarity_cache()
-            release_dedupe_cache()
+            # Steady-state hygiene across the query loop: drop the
+            # session cache, and let the context cleaner drop the local
+            # checkpoints the last query no longer references.
+            spark.catalog.clearCache()
+            gc.collect()
+            spark.sparkContext._jvm.System.gc()
         if name not in oracles:
             print(f"ok   {name}: rows-only ({len(srows)} rows)")
             continue

@@ -29,6 +29,16 @@ def corpus(spark, corpus_pdfs):
 
 
 @pytest.fixture
+def persisted_frames(spark):
+    """``persisted_frames()`` counts the RDDs behind persisted
+    DataFrames (Spark names them after their plan).  Unnamed ones, such
+    as local checkpoints, are dropped by the context cleaner once
+    nothing references them, so they are left out."""
+    jsc = spark.sparkContext._jsc
+    return lambda: sum(rdd.name() is not None for rdd in jsc.getPersistentRDDs().values())
+
+
+@pytest.fixture
 def job_group(spark):
     """``with job_group(name) as jobs:`` runs the block under the Spark
     job group ``name``; ``jobs()`` counts the jobs started in it so far."""

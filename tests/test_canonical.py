@@ -6,7 +6,6 @@ from crawler_apple_podcast_spark.operators.canonical import (
     canonical_edges,
     resolve_canonical,
 )
-from crawler_apple_podcast_spark.operators.redirects import release_redirect_cache
 
 
 def _pages(spark, rows):
@@ -61,7 +60,6 @@ def test_chain_collapse_and_cycle_truncation(spark):
     assert out["https://x.ex/u2"] == ("https://x.ex/u3", 1, "resolved")
     assert out["https://x.ex/c1"] == (None, None, "truncated")
     assert out["https://x.ex/c2"] == (None, None, "truncated")
-    release_redirect_cache()
 
 
 def test_extraction_laxity_and_attribute_anchoring(spark):

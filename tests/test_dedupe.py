@@ -172,14 +172,11 @@ def test_null_keys_survive_as_singletons(spark):
     assert out == [0, 1, 3, 4]
 
 
-def test_dedupe_cache_release(spark):
-    """sequential_or_dedupe must not net-leak persisted frames once the
-    caller releases the registry (VERDICT r2 #6)."""
-    from crawler_apple_podcast_spark.operators.dedupe import release_dedupe_cache
-
-    release_dedupe_cache()
-    spark.catalog.clearCache()
-    before = spark.sparkContext._jsc.getPersistentRDDs().size()
+def test_dedupe_cache_release(spark, persisted_frames):
+    """sequential_or_dedupe releases its internal caches and
+    local-checkpoints its survivors, so a call leaves no persisted
+    frame behind and the caller has nothing to release."""
+    before = persisted_frames()
     cand = spark.createDataFrame(
         [(0, "U1", "1"), (1, "U1", "2"), (2, "U2", "2")],
         "ord BIGINT, url STRING, uid STRING",
@@ -187,16 +184,7 @@ def test_dedupe_cache_release(spark):
     seen = spark.createDataFrame([], "url STRING, uid STRING")
     out = sequential_or_dedupe(cand, seen)
     assert out.count() == 2
-    release_dedupe_cache()
-    assert spark.sparkContext._jsc.getPersistentRDDs().size() <= before
-
-    # Explicit registry: caller owns the release.
-    reg: list = []
-    out2 = sequential_or_dedupe(cand, seen, cache_registry=reg)
-    assert out2.count() == 2 and len(reg) == 1
-    for f in reg:
-        f.unpersist()
-    assert spark.sparkContext._jsc.getPersistentRDDs().size() <= before
+    assert persisted_frames() == before
 
 
 def test_two_key_or_anti_join_set_semantics(spark):

@@ -325,7 +325,3 @@ def test_ahash_near_pairs_finds_perturbed_twins(spark):
     assert planted <= pairs  # every twin recovered
     # random 400-byte blobs are far apart: nothing beyond the twins
     assert pairs == planted
-    from crawler_apple_podcast_spark.operators.similarity import (
-        release_similarity_cache,
-    )
-    release_similarity_cache()

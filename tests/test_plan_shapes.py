@@ -99,14 +99,9 @@ def test_minhash_probe_touches_corpus_via_semi_join(spark):
         12,
         3,
     )
-    reg = []
-    pairs, _ = S.minhash_probe_new(
-        new, idx, d, "doc_id", "text", 3, 500, cache_registry=reg
-    )
+    pairs, _ = S.minhash_probe_new(new, idx, d, "doc_id", "text", 3, 500)
     p = _plan(pairs)
     assert "LeftSemi" in p  # old corpus text read only for candidates
-    for f in reg:
-        f.unpersist()
 
 
 def test_classifier_broadcasts_weights_one_doc_shuffle(spark, qs):
@@ -187,21 +182,26 @@ def test_sniff_and_feed_parse_are_narrow_maps(spark, qs):
         assert "BatchEvalPython" not in p and "ArrowEvalPython" not in p, name
 
 
-def test_redirect_resolution_round_count_is_logarithmic(spark):
+def test_redirect_resolution_round_count_is_logarithmic(spark, job_group):
     # the pointer-doubling claim: ceil(log2(max_hops)) composition
-    # rounds (+1 base mapping), NOT one join per hop
+    # rounds (+1 base mapping), NOT one join per hop.  Each round is one
+    # local checkpoint, so every round adds the same number of jobs:
+    # 32 hops take 5 rounds more than 1 hop (reach 1,2,4,8,16 -> 32).
     from crawler_apple_podcast_spark.operators.redirects import resolve_redirects
 
     edges = spark.createDataFrame(
         [(f"u{i}", f"u{i+1}") for i in range(40)], "src_url STRING, dst_url STRING"
     )
-    reg = []
-    p = _plan(resolve_redirects(edges, max_hops=32, cache_registry=reg))
-    # 1 base + 5 doublings (reach 1,2,4,8,16 -> 32), never 32 rounds
-    assert len(reg) == 6
+    jobs = {}
+    for max_hops in (1, 2, 32):
+        with job_group(f"redirect-rounds-{max_hops}") as n:
+            out = resolve_redirects(edges, max_hops=max_hops)
+            jobs[max_hops] = n()
+    per_round = jobs[2] - jobs[1]
+    assert per_round > 0, jobs
+    assert jobs[32] - jobs[1] == 5 * per_round, jobs
+    p = _plan(out)
     assert "CartesianProduct" not in p and "SinglePartition" not in p
-    for f in reg:
-        f.unpersist()
 
 
 def test_inverted_index_window_and_group_share_term_exchange(spark, qs):
@@ -335,3 +335,26 @@ def test_wave_loop_jobs_per_wave(spark, corpus, tmp_path, job_group, wave_second
         n = jobs()
     assert out.n_waves > 0
     assert n <= 30 * out.n_waves, (n, out.n_waves)
+
+
+@pytest.mark.parametrize(
+    "name",
+    [
+        "u3_cuckoo_gated_dedupe",
+        "e2_seed_discovery",
+        "dedup_minhash_lsh",
+        "dedup_minhash_incremental",
+        "dedup_simhash",
+        "mm_ahash_near_pairs",
+        "dedup_semantic",
+        "crawl_redirect_resolve",
+        "crawl_canonical_alias",
+    ],
+)
+def test_catalog_entry_leaves_no_persisted_frame(spark, qs, persisted_frames, name):
+    """Operators local-checkpoint what they materialize, so collecting a
+    catalog entry leaves no persisted frame behind and nobody has to
+    release one."""
+    before = persisted_frames()
+    qs[name](spark, SF).collect()
+    assert persisted_frames() == before

@@ -5,7 +5,6 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from crawler_apple_podcast_spark.operators.politeness import (
-    filter_disallowed,
     host_budgets,
     parse_robots,
     politeness_gate,
@@ -72,21 +71,6 @@ def test_default_budget_schedules_everything(spark):
     sched, deferred = politeness_gate(f, None, key_cols=["seed_index", "fetch_url"])
     assert sched.count() == f.count()
     assert deferred.count() == 0
-
-
-def test_filter_disallowed(spark, corpus):
-    pages, _ = corpus
-    robots = parse_robots(pages)
-    blocked_hosts = [r.host for r in robots.where(F.col("disallow") != "").collect()]
-    if not blocked_hosts:
-        return
-    h = blocked_hosts[0]
-    f = spark.createDataFrame(
-        [(0, f"https://{h}/private/x", 0), (1, f"https://{h}/ok/x", 0)],
-        "seed_index INT, fetch_url STRING, priority INT",
-    )
-    out = [r.seed_index for r in filter_disallowed(f, robots).collect()]
-    assert out == [1]
 
 
 # ------------------------------------------------ cross-wave rate pacing

@@ -1,16 +1,13 @@
 """Redirect resolution (operators/redirects.py): referee parity on
 random functional graphs, cap/cycle semantics, determinism of the
-functional-graph collapse, and cache hygiene."""
+functional-graph collapse, and that no persisted frame outlives a call."""
 
 from __future__ import annotations
 
 from hypothesis import given, settings, strategies as st
 from pyspark.sql import functions as F
 
-from crawler_apple_podcast_spark.operators.redirects import (
-    release_redirect_cache,
-    resolve_redirects,
-)
+from crawler_apple_podcast_spark.operators.redirects import resolve_redirects
 
 
 def _referee(edges, max_hops):
@@ -33,16 +30,10 @@ def _referee(edges, max_hops):
 
 def _run(spark, edges, max_hops):
     df = spark.createDataFrame(edges, "src_url STRING, dst_url STRING")
-    reg = []
-    got = {
+    return {
         r.src_url: (r.final_url, r.hops, r.status)
-        for r in resolve_redirects(
-            df, max_hops=max_hops, cache_registry=reg
-        ).collect()
+        for r in resolve_redirects(df, max_hops=max_hops).collect()
     }
-    for f in reg:
-        f.unpersist()
-    return got
 
 
 @settings(max_examples=12, deadline=None)
@@ -83,10 +74,10 @@ def test_duplicate_observations_collapse_to_min(spark):
     assert got["s"] == ("z1", 1, "resolved")
 
 
-def test_module_cache_drains(spark):
+def test_module_cache_drains(spark, persisted_frames):
+    """Every round is local-checkpointed, so resolving leaves no
+    persisted frame for the caller to release."""
     df = spark.createDataFrame([("x", "y")], "src_url STRING, dst_url STRING")
-    base = spark.sparkContext._jsc.getPersistentRDDs().size()
+    before = persisted_frames()
     resolve_redirects(df, max_hops=8).count()
-    assert spark.sparkContext._jsc.getPersistentRDDs().size() > base
-    release_redirect_cache()
-    assert spark.sparkContext._jsc.getPersistentRDDs().size() <= base
+    assert persisted_frames() == before

@@ -248,12 +248,11 @@ def test_quantize_half_up_matches_oracle():
     assert got[0] == 63  # 62.5 rounds UP, not to even
 
 
-def test_similarity_cache_release(spark):
-    """minhash_dedup_pairs must not net-leak persisted frames once the
-    caller releases the registry (VERDICT r2 #6)."""
-    S.release_similarity_cache()
-    spark.catalog.clearCache()
-    before = spark.sparkContext._jsc.getPersistentRDDs().size()
+def test_similarity_cache_release(spark, persisted_frames):
+    """minhash_dedup_pairs releases its signatures and local-checkpoints
+    its candidates, so a call leaves no persisted frame for the caller
+    to release."""
+    before = persisted_frames()
     base = " ".join(f"w{i}" for i in range(20))
     df = spark.createDataFrame(
         [(1, base), (2, base + " z"), (3, "p q r s t u")],
@@ -261,17 +260,7 @@ def test_similarity_cache_release(spark):
     )
     out = S.minhash_dedup_pairs(df, "doc_id", "text", 3, 500)
     assert out.count() == 1
-    S.release_similarity_cache()
-    assert spark.sparkContext._jsc.getPersistentRDDs().size() <= before
-
-    reg: list = []
-    out2 = S.minhash_dedup_pairs(df, "doc_id", "text", 3, 500, cache_registry=reg)
-    # only the candidate frame outlives the call (signatures are
-    # released internally once candidates materialize)
-    assert out2.count() == 1 and len(reg) == 1
-    for f in reg:
-        f.unpersist()
-    assert spark.sparkContext._jsc.getPersistentRDDs().size() <= before
+    assert persisted_frames() == before
 
 
 def test_lsh_multiprobe_2bit_recall_monotone(spark, emb):
@@ -474,7 +463,6 @@ def test_incremental_probe_equals_batch_restriction(spark):
     )
     old = docs.where(F.pmod("doc_id", F.lit(5)) != 0)
     new = docs.where(F.pmod("doc_id", F.lit(5)) == 0)
-    reg = []
     idx = S.lsh_band_buckets(
         S.minhash_signatures_from_hashes(
             S.shingle_hashes(old, "doc_id", "text", 3), 36
@@ -482,9 +470,7 @@ def test_incremental_probe_equals_batch_restriction(spark):
         bands=12,
         rows_per_band=3,
     )
-    pairs, nb = S.minhash_probe_new(
-        new, idx, docs, "doc_id", "text", 3, 500, cache_registry=reg
-    )
+    pairs, nb = S.minhash_probe_new(new, idx, docs, "doc_id", "text", 3, 500)
     got = sorted((r.doc_a, r.doc_b, r.jaccard_milli) for r in pairs.collect())
     assert got == expected and got
     # updated index == batch banding over everything
@@ -502,8 +488,6 @@ def test_incremental_probe_equals_batch_restriction(spark):
         )
     )
     assert merged == all_buckets
-    for f in reg:
-        f.unpersist()
 
 
 def test_repeated_span_report_hand_case(spark):
@@ -628,7 +612,6 @@ def test_lsh_bucket_cap_star_pairs_mega_cluster(spark):
         (r.id, r.component) for r in connected_components(unbounded).collect()
     }
     assert cc_cap == cc_unb
-    S.release_similarity_cache()
 
 
 def test_lsh_bucket_cap_chain_enumeration_documented(spark):
@@ -705,4 +688,3 @@ def test_lsh_index_stamp_roundtrip_and_refusal(spark):
     finally:
         spark.sql(f"DROP TABLE IF EXISTS {table}")
         spark.sql(f"DROP TABLE IF EXISTS {table}__meta")
-        S.release_similarity_cache()
