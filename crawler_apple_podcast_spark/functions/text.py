@@ -64,10 +64,6 @@ def lang_id(text: Column, threshold_milli: int = 30) -> Column:
     )
 
 
-def punct_count(text: Column) -> Column:
-    return F.size(F.regexp_extract_all(text, F.lit(r"[^A-Za-z0-9 ]"), F.lit(0))).cast("long")
-
-
 def quality_score_milli(text: Column) -> Column:
     """Deterministic integer quality score in [0, 1000]: mean of three
     per-mille components — stopword ratio (natural-language signal),

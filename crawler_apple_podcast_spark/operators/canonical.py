@@ -76,19 +76,6 @@ def declared_href(html):
     )
 
 
-def canonical_href(html, base_url):
-    """Declared canonical URL of a page (absolute), NULL when the page
-    declares none.
-
-    WARNING (codegen): this inline form repeats the html regex scan in
-    every ``resolve_href`` CASE branch — fine inside a small
-    expression, but a wide projection over real html blows the janino
-    method limit.  Dataflow callers should stage ``declared_href`` as
-    its own column first, as ``canonical_edges`` does."""
-    href = declared_href(html)
-    return F.when(href.isNotNull(), resolve_href(href, base_url))
-
-
 def canonical_edges(
     pages: DataFrame, url_col: str = "url", html_col: str = "html"
 ) -> DataFrame:

@@ -108,12 +108,13 @@ def semantic_dedup(
     q = embeddings.select(
         F.col(id_col), _quantized(vec_col).alias("_qe")
     ).withColumn("_nq", _qdot(F.col("_qe"), F.col("_qe")))
-    # Both self-join sides derive from `base`; left lazy, Spark re-runs
-    # the Arrow matmul assignment once PER SIDE (the same double-compute
-    # trap simhash_near_pairs documents).  Local-checkpointed, it goes
-    # with the returned frame; a lost executor fails the job instead of
-    # recomputing it.
-    base = assign.join(q, id_col).where(F.col("_nq") > 0).localCheckpoint()
+    # Both self-join sides and the result derive from `assigned`; left
+    # lazy, Spark re-runs the Arrow matmul assignment once PER READER
+    # (the same double-compute trap simhash_near_pairs documents).
+    # Local-checkpointed, it goes with the returned frame; a lost
+    # executor fails the job instead of recomputing it.
+    assigned = assign.join(q, id_col).localCheckpoint()
+    base = assigned.where(F.col("_nq") > 0)
     a = base.select(
         F.col(id_col).alias("_va"), "cell",
         F.col("_qe").alias("_qa"), F.col("_nq").alias("_na"),
@@ -135,7 +136,7 @@ def semantic_dedup(
         .distinct()
         .withColumn("_drop", F.lit(True))
     )
-    return assign.join(dropped, id_col, "left").select(
+    return assigned.join(dropped, id_col, "left").select(
         id_col,
         F.col("cell").cast("long").alias("cell"),
         F.col("_drop").isNull().alias("keep"),

@@ -224,72 +224,12 @@ def shingle_hashes(df: DataFrame, id_col: str, text_col: str, n: int = 3) -> Dat
     return t1.select("doc_id", F.explode(grams).alias("_sh"))
 
 
-def minhash_signatures(shingles: DataFrame, n_hashes: int = 64) -> DataFrame:
-    """(doc_id, m0..m{n-1}) — min over seeded xxhash64 per hash family.
-    Entirely JVM-side; one shuffle (the groupBy).
-
-    The shingle string is hashed ONCE (``xxhash64(shingle)``); the
-    n-hash family is derived from that 8-byte long
-    (``xxhash64(h, i)``), so per-family cost is fixed-width instead of
-    re-hashing the full string n times — ~n× less string traffic on
-    the dominant map stage.  Partial (map-side) min aggregation means
-    the shuffle carries one 64-column row per (doc, partition).
-    """
-    hashed = shingles.select("doc_id", F.xxhash64("shingle").alias("_sh"))
-    return minhash_signatures_from_hashes(hashed, n_hashes)
-
-
 def minhash_signatures_from_hashes(hashed: DataFrame, n_hashes: int = 64) -> DataFrame:
     derived = hashed.select(
         "doc_id", *[F.xxhash64("_sh", F.lit(i)).alias(f"h{i}") for i in range(n_hashes)]
     )
     return derived.groupBy("doc_id").agg(
         *[F.min(f"h{i}").alias(f"m{i}") for i in range(n_hashes)]
-    )
-
-
-def minhash_signatures_map_only(
-    df: DataFrame, id_col: str, text_col: str, n: int = 3, n_hashes: int = 36
-) -> DataFrame:
-    """(doc_id, m0..m{n-1}) with ZERO shuffles: the per-doc gram-hash
-    array is materialized in its own projection (lambda re-eval trap),
-    then each family is ``array_min(transform(_gh, h -> xxhash64(h, i)))``
-    — the same family derivation as ``minhash_signatures_from_hashes``
-    (min over ``xxhash64(occurrence_hash, i)``), so the signatures are
-    byte-identical (``test_similarity`` asserts this), but computed as
-    a narrow map over one row per doc instead of
-    explode -> shuffle -> groupBy-min.
-
-    Trade-off vs the explode path (``shingle_hashes`` ->
-    ``minhash_signatures_from_hashes``): this variant moves zero bytes
-    but evaluates its higher-order lambdas INTERPRETED — Spark does
-    not whole-stage-codegen ``transform``/``zip_with`` bodies — while
-    the explode path keeps every hash inside codegen and its
-    groupBy-min shuffle carries only one 37-column row per (doc,
-    partition) after map-side combine.  Measured at sf0.1 the explode
-    path is ~1.5x faster (0.69 s vs 1.02 s), which is why
-    ``minhash_dedup_pairs`` uses it; this map-only form is the right
-    plan only when shuffle capacity, not CPU, is the binding
-    constraint (e.g. a heavily over-subscribed shuffle service).
-
-    Docs with fewer than ``n`` tokens have no shingles and are dropped
-    (as the explode path drops them) — otherwise their all-NULL
-    signatures would band every short doc with every other."""
-    t1 = _spread(df, F.col(id_col)).select(
-        F.col(id_col).alias("doc_id"),
-        F.transform(tokens(F.col(text_col)), lambda t: F.xxhash64(t)).alias("_th"),
-    )
-    grams = F.transform(
-        F.sequence(F.lit(1), F.size("_th") - n + 1),
-        lambda i: F.xxhash64(*[F.element_at(F.col("_th"), i + j) for j in range(n)]),
-    )
-    t2 = t1.where(F.size("_th") >= n).select("doc_id", grams.alias("_gh"))
-    return t2.select(
-        "doc_id",
-        *[
-            F.array_min(F.transform(F.col("_gh"), lambda h: F.xxhash64(h, F.lit(i)))).alias(f"m{i}")
-            for i in range(n_hashes)
-        ],
     )
 
 
@@ -479,10 +419,9 @@ def minhash_dedup_pairs(
     — per-occurrence gram hashes (fixed-width longs, never n-gram
     strings) exploded into a groupBy-min whose map-side combine leaves
     one 37-column row per (doc, partition) on the shuffle, with every
-    hash inside whole-stage codegen.  (The zero-shuffle
-    ``minhash_signatures_map_only`` twin produces byte-identical
-    signatures but evaluates its lambdas interpreted — measured ~1.5x
-    slower; see its docstring for when to prefer it.)  The exact
+    hash inside whole-stage codegen.  (A zero-shuffle map-only form,
+    ``array_min(transform(...))`` per family, evaluates its lambdas
+    interpreted and measured ~1.5x slower at sf0.1.)  The exact
     shingle-set materialization (string distinct) happens ONLY for the
     docs that appear in some LSH candidate pair — at 100 TB that is
     the near-dup fraction, not the corpus."""
@@ -813,7 +752,7 @@ def _qdot(a, b) -> F.Column:
     64-double arrays into the join row, not by lambda dispatch.  (The
     same interpreted-HOF argument DOES win for MinHash signatures,
     where the explode path replaces 36 array passes per doc — see
-    minhash_signatures_map_only.)"""
+    minhash_dedup_pairs.)"""
     return F.aggregate(F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x)
 
 

@@ -3,40 +3,19 @@
 Nearly the whole frontier lives on two hosts
 (``amp-api.podcasts.apple.com`` / ``podcasts.apple.com`` — reference
 corpus evidence in doc/web_search_info.sql:41+), so any host-keyed
-repartition/join/agg would put ~100% of rows in one task.  These
-helpers salt the key explicitly; AQE skew-join splitting is enabled in
-``session.py`` as the runtime backstop.
+repartition/join/agg would put ~100% of rows in one task.
+``two_phase_agg`` salts the grouping key explicitly; AQE skew-join
+splitting is enabled in ``session.py`` as the runtime backstop.
 
-All results are byte-equal to their unsalted equivalents — salting
+Its result is byte-equal to the unsalted aggregation — salting
 changes the physical plan only — which is what lets the driver verify
-them against plain-SQL oracles.
+it against a plain-SQL oracle.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-from ..functions.urls import url_hash
-
-
-def salted_repartition(
-    df: DataFrame, key_col: str, n_partitions: int, salt_n: int = 16, salt_src: str | None = None
-) -> DataFrame:
-    """``repartition(host)`` with a salt term so a dominant key spreads
-    over ``salt_n`` partitions."""
-    src = F.col(salt_src) if salt_src else url_hash(F.col(key_col))
-    return df.repartition(
-        n_partitions, F.col(key_col), F.pmod(src, F.lit(salt_n))
-    )
-
-
-def salted_broadcast_join(
-    big: DataFrame, small: DataFrame, key: str, how: str = "inner"
-) -> DataFrame:
-    """Skew-proof join: broadcast the small side, never shuffle the big
-    side on the skewed key."""
-    return big.join(F.broadcast(small), key, how)
 
 
 def two_phase_agg(

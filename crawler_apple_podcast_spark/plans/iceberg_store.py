@@ -143,7 +143,7 @@ class IcebergSnapshotStore:
         summary: dict[str, Any] = {"wave": wave, "ts": time.time(), "tables": {}}
         for name, df in tables.items():
             # Reserved `_wave` partition column: several engine tables
-            # (e.g. wave metrics) already carry their own `wave` column.
+            # (e.g. episodes, fetch_log) already carry their own `wave` column.
             staged = df.withColumn("_wave", F.lit(wave).cast("int"))
             full = self._tbl(name)
             if self._table_exists(full):

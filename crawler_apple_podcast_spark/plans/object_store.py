@@ -11,8 +11,8 @@ doc/data_download.sql:18-19).  Spark-side the same contract is:
    ``status=2, lock=1`` via ``merge_status`` (K3), committed BEFORE any
    blob moves so a crashed worker's rows are visibly stuck processing;
 2. **upload** — an Arrow ``mapInPandas`` stage fetches each blob
-   (deterministic fake by default; the real HTTP fetch is an honest
-   ``NotImplementedError`` stub) and writes it to
+   (deterministic fake by default; a deployment passes its HTTP GET as
+   ``fetch_fn``) and writes it to
    ``<bucket_root>/<cos_key>`` with a tmp-file + atomic-rename put —
    the ``foreachPartition`` side-effect pattern, shaped as
    ``mapInPandas`` so the per-row outcome comes back as a DataFrame
@@ -49,16 +49,6 @@ def deterministic_fake_fetch(asset_url: str) -> bytes:
     the URL (so tests can assert blob content byte-exactly)."""
     h = hashlib.md5(asset_url.encode("utf-8")).hexdigest()
     return f"BLOB:{asset_url}:{h}".encode("utf-8")
-
-
-def http_fetch(asset_url: str) -> bytes:
-    """The real download (reference: requests.get at
-    handler/apple_podcast_api.py:151-161).  Network is out of sandbox
-    scope; a deployment swaps this in for ``deterministic_fake_fetch``."""
-    raise NotImplementedError(
-        "live HTTP fetch is out of sandbox scope; wire requests.get / an "
-        "async fetcher pool here on a real deployment"
-    )
 
 
 def bucket_put(bucket_root: str, key: str, data: bytes) -> None:

@@ -23,14 +23,16 @@ Scale shape per wave (1000-executor reading 100 TB):
 - per-wave state is truncated via localCheckpoint / snapshot read-back,
   so the logical plan does not grow with wave count; read-backs carry
   the schema recorded at commit, so none starts a schema-inference job;
-- every wave commits atomically through ``SnapshotStore`` with
-  per-host counters in the manifest (kill -> resume from HEAD).
+- a wave materializes and commits only what a later step or a caller
+  reads: every wave commits ``episodes``, ``fetch_log``, ``frontier``
+  and ``url_status`` atomically through ``SnapshotStore`` (kill ->
+  resume from HEAD); the per-(wave, host) counters are derived from
+  those facts by ``wave_metrics``, never stored.
 """
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
-from typing import Any
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -133,14 +135,40 @@ def http_fetcher_stub(wave_side: DataFrame) -> DataFrame:
 @dataclass
 class CrawlOutputs:
     episodes: DataFrame
-    metrics: DataFrame
+    metrics: DataFrame  # wave_metrics(fetch_log, episodes), lazy
     fetch_log: DataFrame
     n_waves: int
-    manifests: list[dict[str, Any]] = field(default_factory=list)
 
 
 def _empty(spark: SparkSession, schema: str) -> DataFrame:
     return spark.createDataFrame([], schema)
+
+
+def wave_metrics(fetch_log: DataFrame, episodes: DataFrame) -> DataFrame:
+    """Per-``(wave, host)`` crawl counters, derived from the wave facts:
+    ``scheduled``, ``fetched``, ``failed`` and the sorted ``fail_urls``
+    from ``fetch_log``; ``records`` counts the episodes extracted from
+    the host's pages that wave (0 when none).  Over a store,
+    ``wave_metrics(store.read_table("fetch_log"),
+    store.read_table("episodes"))`` reports every committed wave,
+    across kill and resume.  One shuffle: the two inputs are unioned
+    and grouped once; an episode row is a row with no ``fetch_ok``."""
+    fetches = fetch_log.select(
+        "wave", U.host_of(F.col("fetch_url")).alias("host"), "fetch_ok", "fetch_url"
+    )
+    records = episodes.select("wave", U.host_of(F.col("source_url")).alias("host"))
+    ok = F.col("fetch_ok")
+    return (
+        fetches.unionByName(records, allowMissingColumns=True)
+        .groupBy("wave", "host")
+        .agg(
+            F.count(ok).alias("scheduled"),
+            F.sum(F.when(ok, 1).otherwise(0)).alias("fetched"),
+            F.sum(F.when(~ok, 1).otherwise(0)).alias("failed"),
+            F.sum(ok.isNull().cast("int")).alias("records"),
+            F.sort_array(F.collect_list(F.when(~ok, F.col("fetch_url")))).alias("fail_urls"),
+        )
+    )
 
 
 def next_frontier(
@@ -179,8 +207,9 @@ def run_crawl(
     """Crawl to frontier exhaustion.  ``seeds``: (seed_index, url[, ...]).
 
     With ``store`` set, each wave is one atomic commit of
-    ``episodes / metrics / fetch_log / frontier``; ``resume=True``
-    restarts from the last committed frontier snapshot.
+    ``episodes / fetch_log / frontier / url_status``; ``resume=True``
+    restarts from the last committed frontier snapshot.  The returned
+    ``metrics`` are ``wave_metrics`` over this run's outputs.
 
     ``fetcher``: callable ``(wave_side) -> fetched`` replacing the
     default frontier⨝pages broadcast join (``make_join_fetcher``) —
@@ -238,9 +267,7 @@ def _crawl_waves(
         visited = _empty(spark, visited_schema)
 
     episodes_parts: list[DataFrame] = []
-    metrics_parts: list[DataFrame] = []
     fetchlog_parts: list[DataFrame] = []
-    manifests: list[dict[str, Any]] = []
     trap_obs: DataFrame | None = None  # (fetch_url, _fp) across waves
 
     wave = start_wave
@@ -290,7 +317,8 @@ def _crawl_waves(
         # join of the small wave against the huge pages table).
         fetched = fetcher(wave_side)
 
-        parsed = E.next_cursor(E.parse_pages(fetched)).localCheckpoint()
+        # No later step reads the page bodies, so they are not kept.
+        parsed = E.next_cursor(E.parse_pages(fetched)).drop("html").localCheckpoint()
 
         if cfg.trap_min_urls is not None:
             obs = parsed.where(F.col("fetch_ok")).select(
@@ -309,19 +337,6 @@ def _crawl_waves(
             F.col("fetch_ok"),
             U.offset_of(F.col("fetch_url")).alias("offset"),
         )
-        metrics = (
-            parsed.withColumn("host", U.host_of(F.col("fetch_url")))
-            .groupBy(F.lit(wave).alias("wave"), "host")
-            .agg(
-                F.count(F.lit(1)).alias("scheduled"),
-                F.sum(F.when(F.col("fetch_ok"), 1).otherwise(0)).alias("fetched"),
-                F.sum(F.when(~F.col("fetch_ok"), 1).otherwise(0)).alias("failed"),
-                F.sum(F.size(F.coalesce(F.col("parsed.data"), F.array()))).alias("records"),
-                F.sort_array(
-                    F.collect_list(F.when(~F.col("fetch_ok"), F.col("fetch_url")))
-                ).alias("fail_urls"),
-            )
-        )
 
         # next frontier: live cursors, minus already-visited (cycle guard),
         # plus politeness-deferred rows.  With a store, visited stays a
@@ -330,7 +345,11 @@ def _crawl_waves(
         visited = visited.unionByName(fetch_log.select("seed_index", "fetch_url"))
         if store is None:
             visited = visited.localCheckpoint()
-        frontier = next_frontier(parsed, visited, deferred, wave + 1).localCheckpoint()
+        # With a store, the commit and its read-back are the frontier's
+        # one materialization; the retry path counts it first.
+        frontier = next_frontier(parsed, visited, deferred, wave + 1)
+        if store is None or cfg.retry_max_attempts is not None:
+            frontier = frontier.localCheckpoint()
 
         if cfg.retry_max_attempts is not None:
             # Cumulative log incl. this wave (parts are materialized).
@@ -357,30 +376,24 @@ def _crawl_waves(
             status_delta = wave_status_delta(
                 fetch_log, deferred.select("seed_index", "fetch_url"), wave
             )
-            m = store.commit_wave(
+            store.commit_wave(
                 wave,
                 {
                     "episodes": eps,
-                    "metrics": metrics,
                     "fetch_log": fetch_log,
                     "frontier": frontier,
                     "url_status": status_delta,
                 },
-                metrics={"wave": wave},
             )
-            manifests.append(m)
             eps = store.read_wave("episodes", wave)
-            metrics = store.read_wave("metrics", wave)
             fetch_log = store.read_wave("fetch_log", wave)
             frontier = store.read_wave("frontier", wave)
             visited = store.read_table("fetch_log").select("seed_index", "fetch_url")
         else:
             eps = eps.localCheckpoint()
-            metrics = metrics.localCheckpoint()
             fetch_log = fetch_log.localCheckpoint()
 
         episodes_parts.append(eps)
-        metrics_parts.append(metrics)
         fetchlog_parts.append(fetch_log)
         wave += 1
 
@@ -397,21 +410,15 @@ def _crawl_waves(
         "seed_index INT, offset INT, pos INT, wave INT, source_url STRING, "
         + E.EPISODE_SCHEMA,
     )
-    metrics = _union(
-        metrics_parts,
-        "wave INT, host STRING, scheduled BIGINT, fetched BIGINT, failed BIGINT, "
-        "records BIGINT, fail_urls ARRAY<STRING>",
-    )
     fetch_log = _union(
         fetchlog_parts,
         "seed_index INT, fetch_url STRING, wave INT, fetch_ok BOOLEAN, offset INT",
     )
     return CrawlOutputs(
         episodes=episodes,
-        metrics=metrics,
+        metrics=wave_metrics(fetch_log, episodes),
         fetch_log=fetch_log,
         n_waves=wave - start_wave,
-        manifests=manifests,
     )
 
 

@@ -55,6 +55,9 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 
 
 def q(name: str, oracle: str | None):
+    if name in _QUERIES:
+        raise ValueError(f"query {name!r} is already registered")
+
     def deco(fn: QueryFn) -> QueryFn:
         _QUERIES[name] = fn
         if oracle is not None:
@@ -3273,30 +3276,6 @@ def dedup_minhash_incremental(spark, sf):
         new, index, d, "doc_id", "text", 3, threshold_milli=500
     )
     return pairs
-
-
-# Leakage-safe corpus split (operators/sampling.py:split_assign): the
-# assignment key is the HOST, so near-dup pages of one site share a
-# split by construction.
-@q(
-    "corpus_split_leakage_safe",
-    "WITH s AS (SELECT doc_id, 'h' || (doc_id % 17) AS host FROM documents),"
-    " b AS (SELECT doc_id, host,"
-    "  CAST('0x' || substr(md5(host), 1, 6) AS BIGINT) % 1000 AS bk FROM s)"
-    " SELECT doc_id, host, CASE WHEN bk < 800 THEN 'train'"
-    "  WHEN bk < 900 THEN 'val' ELSE 'test' END AS split FROM b",
-)
-def corpus_split_leakage_safe(spark, sf):
-    """Host-keyed deterministic train/val/test split."""
-    d = _t(spark, sf, "documents").select(
-        "doc_id",
-        F.concat(F.lit("h"), F.pmod("doc_id", F.lit(17)).cast("string")).alias(
-            "host"
-        ),
-    )
-    return SAMP.split_assign(
-        d, "host", [("train", 800), ("val", 100), ("test", 100)]
-    )
 
 
 # Link-density spam signals (operators/reputation.py:

@@ -25,6 +25,7 @@ SUBSET = [
     "corpus_sample_stratified",
     "corpus_profile",
     "mm_wav_header",
+    "corpus_split_leakage_safe",
 ]
 
 
@@ -58,6 +59,17 @@ def test_every_query_has_callable_and_alias_consistency():
     # referees the values against direct zlib.compress calls.
     NO_ORACLE_OK = {"dedup_simhash_prod", "text_compression_signal"}
     assert set(qs) - set(oracles) == NO_ORACLE_OK
+
+
+def test_registry_refuses_a_repeated_name():
+    """A second registration under a taken name would silently replace
+    the first entry and its oracle; the registry raises instead."""
+    from crawler_apple_podcast_spark.queries import q, queries
+
+    before = queries()["p1_filter_project"]
+    with pytest.raises(ValueError, match="p1_filter_project"):
+        q("p1_filter_project", "SELECT 1")
+    assert queries()["p1_filter_project"] is before
 
 
 @pytest.mark.parametrize("name", SUBSET)

@@ -61,21 +61,6 @@ def test_minhash_lsh_equals_exact_on_documents(spark, docs):
     assert lsh == exact
 
 
-def test_signature_derivations_byte_identical(spark, docs):
-    """The zero-shuffle map-only signature scan and the codegen
-    explode+groupBy-min path (the one minhash_dedup_pairs runs) must
-    produce byte-identical signatures — same gram-hash chaining, same
-    xxhash64(h, i) family derivation, same short-doc drop rule."""
-    a = S.minhash_signatures_map_only(docs, "doc_id", "text", 3, 12)
-    b = S.minhash_signatures_from_hashes(
-        S.shingle_hashes(docs, "doc_id", "text", 3), 12
-    )
-    ra = sorted(tuple(r) for r in a.collect())
-    rb = sorted(tuple(r) for r in b.collect())
-    assert ra == rb
-    assert len(ra) > 0
-
-
 def test_simhash_identical_docs_and_hamming(spark):
     df = spark.createDataFrame(
         [(1, "w1 w2 w3 w4 w5 w6"), (2, "w1 w2 w3 w4 w5 w6"), (3, "z1 z2 z3 z4 z5 z6")],

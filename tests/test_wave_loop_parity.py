@@ -5,6 +5,7 @@ fetch set, identical extraction bytes."""
 from __future__ import annotations
 
 from collections import Counter
+from urllib.parse import urlsplit
 
 from pyspark.sql import functions as F
 
@@ -13,11 +14,12 @@ from crawler_apple_podcast_spark.datagen.corpus import to_spark
 from crawler_apple_podcast_spark.functions.episodes import parity_text
 from crawler_apple_podcast_spark.oracle import crawl
 from crawler_apple_podcast_spark.plans.snapshots import SnapshotStore
-from crawler_apple_podcast_spark.serde import normalize_fetch_url
+from crawler_apple_podcast_spark.serde import normalize_fetch_url, offset_of
 from crawler_apple_podcast_spark.plans.wave_loop import (
     WaveConfig,
     next_frontier,
     run_crawl,
+    wave_metrics,
 )
 
 
@@ -118,16 +120,58 @@ def test_next_frontier_large_visited_not_broadcast(spark):
     assert all(int(u.rsplit("/", 1)[1]) % 2 == 1 for u in got)
 
 
-def test_metrics_counters(spark, corpus, corpus_pdfs):
-    want = _oracle(corpus_pdfs)
-    got = _engine(spark, corpus)
-    total = got.metrics.agg(
-        F.sum("scheduled").alias("s"), F.sum("fetched").alias("ok"),
-        F.sum("failed").alias("bad"),
-    ).collect()[0]
-    assert total.s == len(want.fetch_log)
-    assert total.ok == sum(1 for _, _, hit in want.fetch_log if hit)
-    assert total.bad == sum(1 for _, _, hit in want.fetch_log if not hit)
+def _oracle_wave_metrics(want) -> dict:
+    """``{(wave, host): (scheduled, fetched, failed, records, fail_urls)}``
+    of the reference crawl.  A seed's k-th fetch falls in wave k (the
+    fixture's budgets never defer), and each run of emissions starting
+    at ``pos`` 0 is the page of the seed's next hit with its offset."""
+    fetches: dict[int, list] = {}
+    for si, url, hit in want.fetch_log:
+        fetches.setdefault(si, []).append((url, hit))
+    records = Counter()
+    cursor = Counter()
+    for e in want.emissions:
+        si = e["seed_index"]
+        if e["pos"] == 0:
+            k = cursor[si]
+            while not (fetches[si][k][1] and offset_of(fetches[si][k][0]) == e["offset"]):
+                k += 1
+            cursor[si] = k + 1
+        records[(si, cursor[si] - 1)] += 1
+    out: dict = {}
+    for si, seq in fetches.items():
+        for k, (url, hit) in enumerate(seq):
+            key = (k, urlsplit(url).hostname)
+            sched, ok, bad, rec, fails = out.get(key, (0, 0, 0, 0, []))
+            out[key] = (
+                sched + 1, ok + hit, bad + (not hit),
+                rec + records[(si, k)], sorted(fails + ([] if hit else [url])),
+            )
+    return out
+
+
+def test_metrics_counters(spark, corpus, corpus_pdfs, tmp_path):
+    """Per wave and host, the derived metrics equal the reference crawl's
+    fetches, failures and emitted episodes, with and without a store;
+    a store-backed wave commits exactly the four fact tables, and the
+    same metrics derive from them."""
+    want = _oracle_wave_metrics(_oracle(corpus_pdfs))
+    pages, seeds = corpus
+    store = SnapshotStore(spark, str(tmp_path / "snap"))
+    for st in (None, store):
+        got = run_crawl(spark, pages, seeds, WaveConfig(max_waves=32), store=st)
+        rows = got.metrics.collect()
+        assert {
+            (r.wave, r.host): (r.scheduled, r.fetched, r.failed, r.records, r.fail_urls)
+            for r in rows
+        } == want
+        assert len(rows) == len(want)
+    lineage = store.lineage()
+    assert len(lineage) == got.n_waves
+    for m in lineage:
+        assert set(m["tables"]) == {"episodes", "fetch_log", "frontier", "url_status"}
+    resumed = wave_metrics(store.read_table("fetch_log"), store.read_table("episodes"))
+    assert sorted(resumed.collect()) == sorted(rows)
 
 
 def test_custom_fetcher_interface_parity(spark, corpus, corpus_pdfs):
