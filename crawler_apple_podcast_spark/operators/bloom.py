@@ -161,11 +161,13 @@ def bloom_gated_anti_join(
     """Exact anti-join accelerated by the Bloom gate: probe-negatives
     bypass the shuffle entirely; probe-positives are confirmed exactly.
 
-    The probed frame is persisted so the two union branches (and any
-    downstream consumer) run the probe UDF exactly once.  Long-running
-    callers (streaming) pass ``cache_registry`` to receive the
-    persisted frame for release once the batch output is materialized
-    — otherwise it lives for the session.
+    The probed frame is local-checkpointed, so the two union branches
+    (and any downstream consumer) run the probe UDF exactly once, and
+    AQE sizes the probe's tasks to the data: a persisted shuffle would
+    keep every shuffle partition, and each Python UDF task pays a fixed
+    start-up cost.  Nothing is left for a caller to release.
+    ``cache_registry``, when given, receives the checkpointed frame
+    (for callers that read the probe's output, such as its row count).
 
     ``confirm_on``: ``"key"`` confirms suspects with a string anti-join
     on ``key_col`` (the byte-exact default).  ``"hashes"`` confirms on
@@ -183,7 +185,7 @@ def bloom_gated_anti_join(
     if confirm_on not in ("key", "hashes"):
         raise ValueError(f"confirm_on must be 'key' or 'hashes', got {confirm_on!r}")
     keep = confirm_on == "hashes"
-    probed = probe_bloom(new, bloom, key_col, keep_hashes=keep).persist()
+    probed = probe_bloom(new, bloom, key_col, keep_hashes=keep).localCheckpoint()
     if cache_registry is not None:
         cache_registry.append(probed)
     definitely_new = probed.where(~F.col("maybe_seen")).drop("maybe_seen")

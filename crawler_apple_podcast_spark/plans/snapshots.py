@@ -118,6 +118,12 @@ class SnapshotStore:
         ]
         if not entries:
             raise FileNotFoundError(f"table {table} has no committed waves")
+        return self.read_entries(entries)
+
+    def read_entries(self, entries: list[dict[str, Any]]) -> DataFrame:
+        """One read of the ``{"path", "schema"}`` entries that manifests
+        record per table (and ``commit_wave`` returns), with their
+        schema when all agree, by inference otherwise."""
         schemas = {e.get("schema") for e in entries}
         schema = schemas.pop() if len(schemas) == 1 else None
         return self._read([e["path"] for e in entries], schema)

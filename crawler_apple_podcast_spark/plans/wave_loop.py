@@ -254,11 +254,18 @@ def _crawl_waves(
     frontier_schema = "seed_index INT, url STRING, priority INT"
     visited_schema = "seed_index INT, fetch_url STRING"
 
+    # With a store, visited is read from the committed fetch_log
+    # entries (path and schema) collected here once and then from each
+    # commit's summary, so no wave re-reads the manifests.
+    visited_entries: list[dict] = []
     start_wave = 0
     if resume and store is not None and store.last_committed_wave() is not None:
         head = store.last_committed_wave()
         frontier = store.read_wave("frontier", head)
-        visited = store.read_table("fetch_log").select("seed_index", "fetch_url")
+        visited_entries = [
+            m["tables"]["fetch_log"] for m in store.lineage() if "fetch_log" in m["tables"]
+        ]
+        visited = store.read_entries(visited_entries).select("seed_index", "fetch_url")
         start_wave = head + 1
     else:
         frontier = seeds.select(
@@ -345,30 +352,30 @@ def _crawl_waves(
         visited = visited.unionByName(fetch_log.select("seed_index", "fetch_url"))
         if store is None:
             visited = visited.localCheckpoint()
-        # With a store, the commit and its read-back are the frontier's
-        # one materialization; the retry path counts it first.
         frontier = next_frontier(parsed, visited, deferred, wave + 1)
-        if store is None or cfg.retry_max_attempts is not None:
-            frontier = frontier.localCheckpoint()
-
         if cfg.retry_max_attempts is not None:
             # Cumulative log incl. this wave (parts are materialized).
             full_log = fetch_log
             for p in fetchlog_parts:
                 full_log = full_log.unionByName(p)
             sched = schedule_retries(full_log, cfg.retry_max_attempts)
-            due = due_retries(sched, wave + 1)
-            if frontier.limit(1).count() == 0 and due.limit(1).count() == 0:
-                # Idle advance: nothing else to do — run the earliest
-                # pending retries now instead of ending the crawl with
-                # work still scheduled (wave numbering stays contiguous
-                # for the snapshot store; backoff is a lower bound).
-                nd = sched.agg(F.min("due_wave")).first()[0]
-                if nd is not None:
-                    due = due_retries(sched, int(nd))
             # Retried URLs are by definition visited, and deferred rows
             # were never fetched — the union is disjoint from the base.
-            frontier = frontier.unionByName(due).localCheckpoint()
+            frontier = frontier.unionByName(due_retries(sched, wave + 1))
+        # With a store, the commit and its read-back are the frontier's
+        # one materialization.
+        if store is None:
+            frontier = frontier.localCheckpoint()
+        if cfg.retry_max_attempts is not None and frontier.limit(1).count() == 0:
+            # Idle advance: nothing else to do — run the earliest
+            # pending retries now instead of ending the crawl with work
+            # still scheduled (wave numbering stays contiguous for the
+            # snapshot store; backoff is a lower bound).  Without a
+            # store this frontier stays lazy: a small plan over the
+            # materialized fetch-log parts.
+            nd = sched.agg(F.min("due_wave")).first()[0]
+            if nd is not None:
+                frontier = due_retries(sched, int(nd))
 
         if store is not None:
             # K3 lifecycle delta: fetched -> 3/4, deferred stays 1;
@@ -376,7 +383,7 @@ def _crawl_waves(
             status_delta = wave_status_delta(
                 fetch_log, deferred.select("seed_index", "fetch_url"), wave
             )
-            store.commit_wave(
+            committed = store.commit_wave(
                 wave,
                 {
                     "episodes": eps,
@@ -384,11 +391,12 @@ def _crawl_waves(
                     "frontier": frontier,
                     "url_status": status_delta,
                 },
-            )
-            eps = store.read_wave("episodes", wave)
-            fetch_log = store.read_wave("fetch_log", wave)
-            frontier = store.read_wave("frontier", wave)
-            visited = store.read_table("fetch_log").select("seed_index", "fetch_url")
+            )["tables"]
+            eps = store.read_entries([committed["episodes"]])
+            fetch_log = store.read_entries([committed["fetch_log"]])
+            frontier = store.read_entries([committed["frontier"]])
+            visited_entries.append(committed["fetch_log"])
+            visited = store.read_entries(visited_entries).select("seed_index", "fetch_url")
         else:
             eps = eps.localCheckpoint()
             fetch_log = fetch_log.localCheckpoint()

@@ -20,10 +20,12 @@ Design
   duplicates — exactly-once downstream given the checkpointed source
   offsets.
 - The batch plan is evaluated once: the confirmed ``fresh`` frame and
-  its politeness ranking are persisted for the batch, every write and
+  its politeness ranking are local-checkpointed, and every write and
   the optional snapshot commit (data and counts) read the two gate
-  outputs split from that cached ranking, and all of them are released
-  when the batch ends.
+  outputs split from that one ranking.  A checkpoint runs through AQE,
+  so the probe UDF and every write get as many tasks and part files as
+  the batch's data needs (a persisted shuffle would keep all of its
+  partitions), and no batch leaves a cached frame to release.
 - Watermarked windowed aggregation (``host_rate_metrics``) gives
   per-host scheduling-rate observability with bounded state; late
   discoveries beyond the watermark are dropped from metrics only,
@@ -155,7 +157,6 @@ def process_candidate_batch(
     """One micro-batch of the frontier stream (also callable directly —
     the unit tests drive it both ways)."""
     st = _seen_states.setdefault(cfg.seen_dir, _SeenState())
-    batch_caches: list[DataFrame] = []
 
     cand = batch_df.select(
         canonicalize_url(F.col("url")).alias("fetch_url"),
@@ -189,9 +190,7 @@ def process_candidate_batch(
         st.n_rebuilds += 1
 
     if st.bloom is not None:
-        fresh = bloom_gated_anti_join(
-            cand, st.base, st.bloom, "fetch_url", cache_registry=batch_caches
-        )
+        fresh = bloom_gated_anti_join(cand, st.base, st.bloom, "fetch_url")
     else:
         fresh = cand.join(st.base, "fetch_url", "left_anti")
     # Exact anti-join against the small recent tail (not Bloom-covered;
@@ -203,13 +202,12 @@ def process_candidate_batch(
             recent = recent.unionByName(p)
         fresh = fresh.join(recent, "fetch_url", "left_anti")
 
-    # Cached so the ranking's two reads of ``fresh`` share one run of
-    # canonicalize → probe → confirm, and the ranking itself once so
-    # the three writes and the snapshot commit split ONE evaluation.
-    fresh = fresh.persist()
-    ranked = politeness_rank(fresh, None, default_budget=cfg.default_budget).persist()
+    # Checkpointed so the ranking's two reads of ``fresh`` share one
+    # run of canonicalize → probe → confirm, and the ranking itself once
+    # so the three writes and the snapshot commit split ONE evaluation.
+    fresh = fresh.localCheckpoint()
+    ranked = politeness_rank(fresh, None, default_budget=cfg.default_budget).localCheckpoint()
     scheduled, deferred = split_ranked(ranked)
-    batch_caches.extend([fresh, ranked])
     # Idempotent per-batch dirs: a replayed batch overwrites its own
     # output instead of appending a duplicate; the dir name doubles as
     # a hive-style `batch_id` partition column on read.
@@ -236,8 +234,8 @@ def process_candidate_batch(
     #   data write is mode=overwrite, the orphan is replaced);
     # - crash AFTER HEAD moved (offsets not yet committed) ->
     #   batch_id <= head -> skip, nothing double-publishes.
-    # The commit writes and counts the cached gate outputs that fed the
-    # per-batch dirs, so it never re-executes the batch plan.
+    # The commit writes and counts the checkpointed gate outputs that
+    # fed the per-batch dirs, so it never re-executes the batch plan.
     if cfg.snapshot_root:
         from ..plans.snapshots import SnapshotStore
 
@@ -253,12 +251,6 @@ def process_candidate_batch(
                     "n_deferred": deferred.count(),
                 },
             )
-
-    # Outputs are on disk — release this batch's cached frames (probed,
-    # fresh, ranked); a long-running stream must not
-    # accumulate storage memory per batch.
-    for df in batch_caches:
-        df.unpersist()
 
 
 def run_frontier_stream(

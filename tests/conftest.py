@@ -38,17 +38,45 @@ def persisted_frames(spark):
     return lambda: sum(rdd.name() is not None for rdd in jsc.getPersistentRDDs().values())
 
 
+class _GroupCounts:
+    """What the jobs of one Spark job group ran, read from the status
+    tracker: ``jobs()`` counts the jobs started so far, ``tasks()`` the
+    tasks their stages completed.  A stage that several jobs list (a
+    shuffle an earlier job wrote) is counted once."""
+
+    def __init__(self, sc, name):
+        self._tracker = sc.statusTracker()
+        self._name = name
+
+    def jobs(self) -> int:
+        return len(self._tracker.getJobIdsForGroup(self._name))
+
+    def tasks(self) -> int:
+        stages = {
+            sid
+            for jid in self._tracker.getJobIdsForGroup(self._name)
+            if (job := self._tracker.getJobInfo(jid)) is not None
+            for sid in job.stageIds
+        }
+        return sum(
+            st.numCompletedTasks
+            for sid in stages
+            if (st := self._tracker.getStageInfo(sid)) is not None
+        )
+
+
 @pytest.fixture
 def job_group(spark):
-    """``with job_group(name) as jobs:`` runs the block under the Spark
-    job group ``name``; ``jobs()`` counts the jobs started in it so far."""
+    """``with job_group(name) as g:`` runs the block under the Spark
+    job group ``name``; ``g.jobs()`` and ``g.tasks()`` count what it
+    has run so far."""
     sc = spark.sparkContext
 
     @contextmanager
     def group(name):
         sc.setJobGroup(name, name)
         try:
-            yield lambda: len(sc.statusTracker().getJobIdsForGroup(name))
+            yield _GroupCounts(sc, name)
         finally:
             sc.setLocalProperty("spark.jobGroup.id", None)
 

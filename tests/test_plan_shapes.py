@@ -197,9 +197,9 @@ def test_redirect_resolution_round_count_is_logarithmic(spark, job_group):
     )
     jobs = {}
     for max_hops in (1, 2, 32):
-        with job_group(f"redirect-rounds-{max_hops}") as n:
+        with job_group(f"redirect-rounds-{max_hops}") as g:
             out = resolve_redirects(edges, max_hops=max_hops)
-            jobs[max_hops] = n()
+            jobs[max_hops] = g.jobs()
     per_round = jobs[2] - jobs[1]
     assert per_round > 0, jobs
     assert jobs[32] - jobs[1] == 5 * per_round, jobs
@@ -336,9 +336,9 @@ def test_wave_loop_jobs_per_wave(spark, corpus, tmp_path, job_group, wave_second
 
     pages, seeds = corpus
     store = SnapshotStore(spark, str(tmp_path / "snap"))
-    with job_group(f"crawl-{wave_seconds}") as jobs:
+    with job_group(f"crawl-{wave_seconds}") as g:
         out = run_crawl(spark, pages, seeds, WaveConfig(wave_seconds=wave_seconds), store=store)
-        n = jobs()
+        n = g.jobs()
     assert out.n_waves > 0
     assert n <= 21 * out.n_waves, (n, out.n_waves)
 
@@ -346,6 +346,8 @@ def test_wave_loop_jobs_per_wave(spark, corpus, tmp_path, job_group, wave_second
 @pytest.mark.parametrize(
     "name",
     [
+        "u3_bloom_gated_dedupe",
+        "frontier_prep_pipeline",
         "u3_cuckoo_gated_dedupe",
         "e2_seed_discovery",
         "dedup_minhash_lsh",

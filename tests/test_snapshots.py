@@ -31,10 +31,10 @@ def test_reads_carry_the_committed_schema(spark, tmp_path, job_group):
     store.commit_wave(0, {"t": df})
     store.commit_wave(1, {"t": df})
     assert store.manifest(1)["tables"]["t"]["schema"] == df.schema.json()
-    with job_group("snapshot-read-back") as jobs:
+    with job_group("snapshot-read-back") as g:
         one = store.read_wave("t", 1)
         both = store.read_table("t")
-        assert jobs() == 0
+        assert g.jobs() == 0
     assert one.schema.simpleString() == both.schema.simpleString() == df.schema.simpleString()
     assert one.collect() == df.collect()
     assert both.collect() == df.collect() * 2
@@ -106,6 +106,30 @@ def test_kill_and_resume_crawl(spark, corpus, tmp_path):
         for r in resume_store.read_table("episodes").collect()
     )
     assert got == want
+
+
+def test_crawl_opens_no_manifest_per_wave(spark, corpus, tmp_path, monkeypatch):
+    """A crawl reads its committed waves back from the entries each
+    commit returns, and a resumed crawl walks the manifests once, so
+    a 6-wave crawl killed after 3 waves and resumed opens 4 manifests
+    (3 on resume, plus the frontier of HEAD).  Re-reading ``fetch_log``
+    through ``read_table`` after every commit, and each table through
+    ``read_wave``, opened 43: O(W^2) in the number of waves."""
+    pages, seeds = corpus
+    opened = []
+    manifest = SnapshotStore.manifest
+
+    def counting(self, wave):
+        opened.append(wave)
+        return manifest(self, wave)
+
+    monkeypatch.setattr(SnapshotStore, "manifest", counting)
+    root = str(tmp_path / "s")
+    first = run_crawl(spark, pages, seeds, WaveConfig(max_waves=3), store=SnapshotStore(spark, root))
+    assert opened == []
+    rest = run_crawl(spark, pages, seeds, WaveConfig(), store=SnapshotStore(spark, root), resume=True)
+    assert first.n_waves + rest.n_waves == 6
+    assert sorted(opened) == [0, 1, 2, 2]
 
 
 def test_resume_is_noop_when_frontier_exhausted(spark, corpus, tmp_path):

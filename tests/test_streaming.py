@@ -308,13 +308,23 @@ def test_ttl_dedup_suppresses_within_horizon_readmits_after(spark, tmp_path):
     assert [u for u, _ in out3].count("https://a.example/x") == 2
 
 
-def test_stream_batches_release_caches_and_commit_their_outputs(spark, tmp_path):
-    """Each batch caches its plan outputs once and releases them all:
-    after every batch, rebuild batches included, the persisted-RDD
-    count is its level before the stream plus the one seen-set base the
-    stream keeps across batches.  The snapshot wave tables hold exactly
-    the rows of the batch's out/carry dirs, and the seen dir holds
-    exactly the scheduled urls."""
+def test_stream_batches_release_caches_and_commit_their_outputs(
+    spark, tmp_path, persisted_frames, job_group
+):
+    """Each batch materializes its plan outputs once and leaves no
+    persisted frame behind: after every batch, rebuild batches
+    included, the named persisted frames are their level before the
+    stream plus the one seen-set base the stream keeps across batches.
+    The batch's local checkpoints run through AQE, so each of its five
+    output dirs (out, seen, carry and the snapshot's two wave tables)
+    holds one part file, and a batch runs at most 60 tasks.  On
+    ``local[4]`` with 8 shuffle partitions these batches ran 21-34
+    tasks, and 42 in the last rebuild batch; persisting the probe, the
+    confirmed rows and the ranking instead kept all 8 partitions of
+    each shuffle, ran 110-172 tasks and wrote 3-4 part files per dir.
+    The snapshot wave tables hold exactly the rows of the batch's
+    out/carry dirs, and the seen dir holds exactly the scheduled
+    urls."""
     from crawler_apple_podcast_spark.plans.snapshots import SnapshotStore
 
     tmp = str(tmp_path)
@@ -325,22 +335,35 @@ def test_stream_batches_release_caches_and_commit_their_outputs(spark, tmp_path)
     cfg.bloom_shards = 4
     cfg.rebuild_every = 2  # rebuilds at batches 0, 2 and 4
     reset_seen_state(cfg.seen_dir)
-    jsc = spark.sparkContext._jsc
     store = SnapshotStore(spark, cfg.snapshot_root)
-    start = jsc.getPersistentRDDs().size()
+    start = persisted_frames()
     n_deferred = 0
 
     def rows(df, *cols):
         return sorted(tuple(r) for r in df.select(*cols).collect())
 
+    def n_parts(path):
+        return sum(f.startswith("part-") for f in os.listdir(path))
+
+    tasks = []
     for b in range(5):
         fresh = [(f"https://h{i % 3}.example/p/{b}-{i}", i % 4, TS) for i in range(8)]
         # rediscoveries of the previous batch's urls and an in-batch repeat
         redisc = [(f"https://h{i % 3}.example/p/{b - 1}-{i}", 0, TS) for i in range(4)]
         batch = spark.createDataFrame(fresh + redisc + fresh[:1], CANDIDATE_SCHEMA)
-        process_candidate_batch(spark, batch, b, cfg)
-        assert jsc.getPersistentRDDs().size() == start + 1, b
+        with job_group(f"stream-batch-{b}") as g:
+            process_candidate_batch(spark, batch, b, cfg)
+            tasks.append(g.tasks())
+        assert persisted_frames() == start + 1, b
 
+        dirs = [
+            f"{cfg.out_dir}/batch_id={b}",
+            f"{cfg.seen_dir}/batch_id={b}",
+            f"{cfg.resolved_carry_dir()}/batch_id={b}",
+            f"{cfg.snapshot_root}/scheduled/wave={b}",
+            f"{cfg.snapshot_root}/deferred/wave={b}",
+        ]
+        assert [n_parts(d) for d in dirs] == [1] * 5, (b, [n_parts(d) for d in dirs])
         out = spark.read.parquet(f"{cfg.out_dir}/batch_id={b}")
         carry = spark.read.parquet(f"{cfg.resolved_carry_dir()}/batch_id={b}")
         seen = spark.read.parquet(f"{cfg.seen_dir}/batch_id={b}")
@@ -353,10 +376,11 @@ def test_stream_batches_release_caches_and_commit_their_outputs(spark, tmp_path)
             "batch_id": b, "n_scheduled": out.count(), "n_deferred": carry.count(),
         }
         n_deferred += carry.count()
+    assert max(tasks) <= 60, tasks
     assert seen_state_stats(cfg.seen_dir)["n_rebuilds"] == 3
     assert n_deferred > 0  # the budget really defers, so carry tables are compared
     # no url is scheduled twice across the stream
     sched = rows(spark.read.parquet(cfg.out_dir), "fetch_url")
     assert len(sched) == len(set(sched))
     reset_seen_state(cfg.seen_dir)
-    assert jsc.getPersistentRDDs().size() == start
+    assert persisted_frames() == start

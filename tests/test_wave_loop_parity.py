@@ -211,12 +211,14 @@ def test_custom_fetcher_interface_parity(spark, corpus, corpus_pdfs):
         run_crawl(spark, pages, seeds, WaveConfig(max_waves=1), fetcher=http_fetcher_stub)
 
 
-def test_retries_recover_wave0_outage(spark, corpus):
+def test_retries_recover_wave0_outage(spark, corpus, tmp_path):
     """A fetcher that blacks out wave 0 entirely: with backoff retries
     enabled the crawl recovers every episode a healthy run finds (the
     idle-advance rule reruns the failed seeds as soon as the frontier
     is otherwise empty); with retries off (the reference's behavior)
-    the failures are lost and nothing is ever extracted."""
+    the failures are lost and nothing is ever extracted.  With a
+    snapshot store the retried crawl makes the same fetches in the same
+    waves and extracts the same episodes."""
     from crawler_apple_podcast_spark.plans.wave_loop import (
         WaveConfig,
         make_join_fetcher,
@@ -257,6 +259,21 @@ def test_retries_recover_wave0_outage(spark, corpus):
     assert worst == 4
     # recovered URLs were fetched at most twice (wave-0 fail + success)
     assert attempts.where(F.col("ever_ok")).agg(F.max("n")).first()[0] <= 2
+
+    stored = run_crawl(
+        spark, pages, seeds, WaveConfig(retry_max_attempts=3), fetcher=outage_fetcher,
+        store=SnapshotStore(spark, str(tmp_path / "snap")),
+    )
+    assert stored.n_waves == retried.n_waves
+
+    def fetches(out):
+        return Counter(tuple(r) for r in out.fetch_log.collect())
+
+    def episodes(out):
+        return sorted(tuple(r) for r in out.episodes.collect())
+
+    assert fetches(stored) == fetches(retried)
+    assert episodes(stored) == episodes(retried)
 
 
 def _gate_partition_errors(store, seeds_pdf) -> list[str]:
