@@ -35,6 +35,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.text import idiv
+from .similarity import _overlap_counts
 
 
 def host_fingerprints(
@@ -76,26 +77,14 @@ def mirror_host_pairs(
     # nothing about mirroring, so they inflate neither numerator nor
     # denominator — a host that is pure boilerplate has size 0 and
     # never pairs.
-    sizes = hf2.groupBy("host").agg(F.count(F.lit(1)).alias("n_fp"))
-    a = hf2.select(F.col("host").alias("host_a"), "fp")
-    b = hf2.select(F.col("host").alias("host_b"), "fp")
-    shared = (
-        a.join(b, "fp")
-        .where(F.col("host_a") < F.col("host_b"))
-        .groupBy("host_a", "host_b")
-        .agg(F.count(F.lit(1)).alias("shared"))
-    )
-    sa = sizes.select(F.col("host").alias("host_a"), F.col("n_fp").alias("_na"))
-    sb = sizes.select(F.col("host").alias("host_b"), F.col("n_fp").alias("_nb"))
     return (
-        shared.join(sa, "host_a")
-        .join(sb, "host_b")
-        .where(F.least("_na", "_nb") >= min_docs)
+        _overlap_counts(hf2, "host", "fp")
+        .where(F.least("na", "nb") >= min_docs)
         .select(
-            "host_a",
-            "host_b",
-            "shared",
-            idiv(F.col("shared") * F.lit(1000), F.least("_na", "_nb")).alias(
+            F.col("a").alias("host_a"),
+            F.col("b").alias("host_b"),
+            F.col("inter").alias("shared"),
+            idiv(F.col("inter") * F.lit(1000), F.least("na", "nb")).alias(
                 "containment_milli"
             ),
         )

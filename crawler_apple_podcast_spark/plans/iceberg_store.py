@@ -8,20 +8,23 @@ class refuses loudly at construction instead of half-working).
 
 Mapping of the store contract onto Iceberg:
 
-- ``commit_wave(wave, tables)``  -> per table: ``df.withColumn("wave",
-  lit(wave)).writeTo(ns.table).append()`` (table auto-created
-  partitioned by ``wave`` on first commit), then ONE marker row
-  appended to ``ns._waves`` carrying (wave, metrics JSON, ts) — the
-  HEAD analog.  Each append is one Iceberg snapshot; per-partition
+- ``commit_wave(wave, tables)``  -> per table: ``df.withColumn("_wave",
+  lit(wave))`` replaces that wave's partition of ``ns.table`` (table
+  auto-created partitioned by ``_wave`` on first commit), then ONE
+  marker row in ``ns._waves`` carrying (wave, ts, metrics JSON, table
+  names JSON) — the HEAD analog.  The summary it returns, like
+  ``manifest(wave)``, maps each table to its entry ``{"table",
+  "wave"}``.  Each replacement is one Iceberg snapshot; per-partition
   lineage lives in Iceberg's own snapshot/manifest metadata
   (``ns.table.snapshots`` / ``.files`` metadata tables).
 - ``last_committed_wave()``      -> ``max(wave)`` of ``ns._waves``;
   a crash between table appends and the marker append leaves orphan
   rows that readers never see because every read filters
   ``wave <= last_committed_wave()``.
-- ``read_wave`` / ``read_table`` -> partition-pruned reads
-  (``WHERE wave = N`` / ``WHERE wave <= HEAD``); Iceberg prunes on the
-  ``wave`` partition column so a wave read touches one partition.
+- ``read_wave`` / ``read_table`` / ``read_entries`` -> partition-pruned
+  reads (``WHERE _wave = N`` / ``WHERE _wave <= HEAD`` / ``WHERE _wave
+  IN (...)``); Iceberg prunes on the ``_wave`` partition column so a
+  wave read touches one partition.
 - ``lineage()``                  -> the ``_waves`` marker rows.
 
 The commit is not two-phase-atomic across N tables the way the manifest
@@ -57,8 +60,10 @@ def iceberg_available(spark: SparkSession, catalog: str) -> bool:
 
 class IcebergSnapshotStore:
     """Same surface as ``SnapshotStore`` (commit_wave / read_wave /
-    read_table / last_committed_wave / manifest / lineage), backed by
-    Iceberg tables under ``<catalog>.<namespace>``."""
+    read_table / read_entries / last_committed_wave / manifest /
+    lineage), backed by Iceberg tables under ``<catalog>.<namespace>``."""
+
+    MARKER_SCHEMA = "wave INT, ts DOUBLE, metrics STRING, tables STRING"
 
     def __init__(self, spark: SparkSession, catalog: str, namespace: str):
         if not iceberg_available(spark, catalog):
@@ -115,7 +120,7 @@ class IcebergSnapshotStore:
     def _ensure_marker(self) -> None:
         self.spark.sql(
             f"CREATE TABLE IF NOT EXISTS {self._tbl('_waves')} "
-            "(wave INT, ts DOUBLE, metrics STRING) USING iceberg"
+            f"({self.MARKER_SCHEMA}) USING iceberg"
         )
 
     # -- commit protocol -------------------------------------------------
@@ -150,12 +155,12 @@ class IcebergSnapshotStore:
                 self._replace_wave_rows(staged, full, "_wave", wave)
             else:
                 self._create_partitioned(staged, full)
-            summary["tables"][name] = {"table": full}
+            summary["tables"][name] = {"table": full, "wave": wave}
         self._ensure_marker()
         # Idempotent re-commit: one marker row per wave (atomic swap).
         marker = self.spark.createDataFrame(
-            [(wave, summary["ts"], json.dumps(metrics or {}))],
-            "wave INT, ts DOUBLE, metrics STRING",
+            [(wave, summary["ts"], json.dumps(metrics or {}), json.dumps(list(tables)))],
+            self.MARKER_SCHEMA,
         )
         self._replace_wave_rows(marker, self._tbl("_waves"), "wave", wave)  # marker LAST = publish
         summary["metrics"] = metrics or {}
@@ -192,13 +197,32 @@ class IcebergSnapshotStore:
             .drop("_wave")
         )
 
+    def read_entries(self, entries: list[dict[str, Any]]) -> DataFrame:
+        """One read of the ``{"table", "wave"}`` entries that
+        ``commit_wave`` returns and ``manifest`` records, all of one
+        table: its rows of those waves."""
+        (full,) = {e["table"] for e in entries}
+        return (
+            self._read(full)
+            .where(F.col("_wave").isin([e["wave"] for e in entries]))
+            .drop("_wave")
+        )
+
     def manifest(self, wave: int) -> dict[str, Any]:
         row = (
             self._read(self._tbl("_waves")).where(F.col("wave") == wave).first()
         )
         if row is None:
             raise FileNotFoundError(f"wave {wave} not committed")
-        return {"wave": wave, "ts": row["ts"], "metrics": json.loads(row["metrics"])}
+        return {
+            "wave": wave,
+            "ts": row["ts"],
+            "metrics": json.loads(row["metrics"]),
+            "tables": {
+                name: {"table": self._tbl(name), "wave": wave}
+                for name in json.loads(row["tables"])
+            },
+        }
 
     def lineage(self) -> list[dict[str, Any]]:
         head = self.last_committed_wave()

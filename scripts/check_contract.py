@@ -1,6 +1,9 @@
 """Local emulation of the driver's correctness gate: run every
 ``queries()`` entry on Spark and its ``oracle_sql()`` on DuckDB at
 sf0.01, compare row count / column names / order-insensitive values.
+Every ``ok`` line ends with a digest of the normalized rows (order-
+insensitive), so two checkouts' outputs can be diffed entry by entry,
+including entries with no oracle.
 
 Usage: python scripts/check_contract.py [sf_dir] [name ...]
 """
@@ -8,6 +11,7 @@ Usage: python scripts/check_contract.py [sf_dir] [name ...]
 from __future__ import annotations
 
 import gc
+import hashlib
 import sys
 from pathlib import Path
 
@@ -69,6 +73,14 @@ def rows_multiset(cols, rows):
     )
 
 
+def digest(cols, rows) -> str:
+    """Order-insensitive digest of the normalized rows and their column
+    names: equal digests mean equal outputs."""
+    return hashlib.sha256(
+        repr((sorted(cols), rows_multiset(cols, rows))).encode()
+    ).hexdigest()[:16]
+
+
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = set(sys.argv[2:])
@@ -100,7 +112,7 @@ def main() -> int:
             gc.collect()
             spark.sparkContext._jvm.System.gc()
         if name not in oracles:
-            print(f"ok   {name}: rows-only ({len(srows)} rows)")
+            print(f"ok   {name}: rows-only ({len(srows)} rows) digest {digest(scols, srows)}")
             continue
         try:
             res = con.execute(oracles[name])
@@ -144,7 +156,7 @@ def main() -> int:
             print(f"FAIL {name}: " + "; ".join(problems))
             failures += 1
         else:
-            print(f"ok   {name}: {len(srows)} rows match oracle")
+            print(f"ok   {name}: {len(srows)} rows match oracle digest {digest(scols, srows)}")
     print("FAILURES:", failures)
     return 1 if failures else 0
 

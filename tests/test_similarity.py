@@ -430,6 +430,34 @@ def test_knn_join_ivf_candidates_prune(spark):
     assert n_cand < 20 * 200 * 0.6  # well under the cross join
 
 
+_VECTOR_OPS = {
+    "knn_join_bruteforce": lambda q, c: S.knn_join_bruteforce(q, c, k=3),
+    "knn_join_lsh": lambda q, c: S.knn_join_lsh(q, c, k=3),
+    "knn_join_ivf": lambda q, c: S.knn_join_ivf(q, c, k=3, n_centroids=4),
+    "embedding_cosine_pairs_exact": lambda q, c: S.embedding_cosine_pairs_exact(c, 0),
+    "embedding_cosine_pairs_blocked": lambda q, c: S.embedding_cosine_pairs_blocked(
+        c, 0, bands=4, rows_per_band=2
+    ),
+}
+
+
+@pytest.mark.parametrize("op", sorted(_VECTOR_OPS))
+def test_vector_ops_drop_null_vectors_and_empty_corpus(spark, op):
+    """A NULL vector has no cosine: the exact and the scale paths drop
+    it before any signature, codebook or UDF, so it changes no result,
+    and an empty corpus gives 0 rows."""
+    schema = "vec_id INT, embedding ARRAY<FLOAT>"
+    rng = np.random.RandomState(2)
+    rows = [(i, [float(x) for x in rng.randn(8)]) for i in range(40)]
+    df = spark.createDataFrame(rows, schema)
+    with_null = spark.createDataFrame(rows + [(40, None)], schema)
+    fn = _VECTOR_OPS[op]
+    want = sorted(fn(df, df).collect())
+    assert want
+    assert sorted(fn(with_null, with_null).collect()) == want
+    assert fn(with_null, spark.createDataFrame([], schema)).count() == 0
+
+
 def test_incremental_probe_equals_batch_restriction(spark):
     """minhash_probe_new on a split corpus == minhash_dedup_pairs on
     the full corpus, restricted to pairs touching the new batch; and
