@@ -13,12 +13,9 @@ scheduler-side engine addition.
 
 Scale: the global remainder rank NEVER uses a single-partition window
 over the host table.  Remainders live in ``[0, S)``, so
-``(rem * NB) div S`` is an ORDER-ALIGNED bucket id (same trick as
-``politeness.hash_bucketed_host_rank``, value-range instead of
-hash-bit): per-bucket counts (<= NB rows) give broadcastable
-cumulative offsets, the within-bucket rank is an ordinary distributed
-window partitioned by bucket, and global rank = offset + local
-row_number.  One shuffle of the host table plus two tiny aggregates.
+``NB-1 - (rem * NB) div S`` is an order-aligned bucket of remainders
+descending, and ``skew.bucketed_scan`` ranks by it.  One shuffle of
+the host table plus two tiny aggregates.
 
 Overflow note: ``score * B`` and ``rem * NB`` must fit in signed 64
 bits — pre-scale scores so ``S * max(B, NB) < 2^63`` (Spark 4 ANSI
@@ -27,8 +24,10 @@ mode would throw, not wrap, if violated).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from .skew import bucketed_scan
 
 
 def apportion_budget(
@@ -55,17 +54,11 @@ def apportion_budget(
     )
     # leftover seats: B - sum(base); tiny 1-row frame
     left = q.agg((F.lit(total) - F.sum("_base")).cast("long").alias("_left"))
-    # order-aligned value buckets over rem in [0, S)
-    b = q.withColumn("_bkt", F.expr(f"(_rem * {n_buckets}) div _s").cast("int"))
-    cnt = b.groupBy("_bkt").agg(F.count(F.lit(1)).alias("_c"))
-    ow = Window.orderBy(F.desc("_bkt")).rowsBetween(Window.unboundedPreceding, -1)
-    off = cnt.withColumn("_off", F.coalesce(F.sum("_c").over(ow), F.lit(0))).drop(
-        "_c"
+    # order-aligned value buckets: ascending _bkt = descending _rem
+    b = q.withColumn(
+        "_bkt", F.expr(f"{n_buckets - 1} - (_rem * {n_buckets}) div _s").cast("int")
     )
-    lw = Window.partitionBy("_bkt").orderBy(F.desc("_rem"), F.asc(key_col))
-    ranked = b.join(F.broadcast(off), "_bkt").withColumn(
-        "_rk", F.row_number().over(lw) + F.col("_off")
-    )
+    ranked = bucketed_scan(b, [], ["_bkt"], [F.desc("_rem"), F.asc(key_col)], "_rk")
     return ranked.crossJoin(F.broadcast(left)).select(
         key_col,
         score_col,

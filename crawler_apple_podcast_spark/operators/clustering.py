@@ -45,7 +45,8 @@ def kmeans_lloyd(
 
     The returned assignment is the one computed AGAINST the final
     centroids (i.e. iteration n_iter's reassignment), matching the
-    oracle's final CTE."""
+    oracle's final CTE.  Rows with a NULL vector are not clustered."""
+    embeddings = embeddings.where(F.col(vec_col).isNotNull())
     cents = ivf_centroids(embeddings, k, id_col, vec_col) if init is None else init
     if dim is None:
         dim = int(cents.shape[1])
@@ -97,7 +98,8 @@ def semantic_dedup(
     stays ~n * cell_size; a runaway cell (embedding-space boilerplate)
     is the skew risk, handled upstream by exact dedup so identical
     vectors never pile into one cell.  Zero-norm vectors join no pairs
-    (cosine undefined) and are always kept.
+    (cosine undefined) and are always kept; a NULL vector is kept too,
+    with a NULL ``cell``, so a ``keep`` filter never loses its row.
 
     Every arithmetic step is exact integer / correctly-rounded IEEE on
     quantized vectors (see ``similarity._quantized``), so a fixed-k,
@@ -105,8 +107,9 @@ def semantic_dedup(
     chains the k-means CTEs with the within-cell pair join.
     """
     assign, _cents = kmeans_lloyd(embeddings, k, n_iter, id_col, vec_col, dim)
-    # Zero-norm vectors stay in `q` (kept, never paired), so it is not a
-    # ``_cosine_side``; a left join against one measured slower at sf0.1.
+    # Zero-norm and NULL vectors stay in `q` (kept, never paired), so it
+    # is not a ``_cosine_side``; a left join against one measured slower
+    # at sf0.1.
     q = embeddings.select(
         F.col(id_col), _quantized(vec_col).alias("_qe")
     ).withColumn("_nq", _qdot(F.col("_qe"), F.col("_qe")))
@@ -115,7 +118,7 @@ def semantic_dedup(
     # (the same double-compute trap simhash_near_pairs documents).
     # Local-checkpointed, it goes with the returned frame; a lost
     # executor fails the job instead of recomputing it.
-    assigned = assign.join(q, id_col).localCheckpoint()
+    assigned = q.join(assign, id_col, "left").localCheckpoint()
     base = assigned.where(F.col("_nq") > 0)
     a = base.select(
         F.col(id_col).alias("_va"), "cell",

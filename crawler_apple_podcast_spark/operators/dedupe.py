@@ -11,19 +11,20 @@ earlier rows survived.
 
 Distributed formulation: survival dependencies only exist between rows
 sharing a url or uid key, i.e. within connected components of the
-bipartite row↔key graph.  We compute components with a handful of
-min-label-propagation shuffles (components are tiny in real corpora —
-the giant ``uid=''`` component degenerates to "first valid row wins"
-and stays cheap because the scan is O(component)), then replay the
-reference's scan order inside each component with one grouped Arrow
-UDF.  Rows in singleton components pass through the same code path.
+bipartite row↔key graph.  ``graph.connected_components`` labels them
+(components are tiny in real corpora — the giant ``uid=''`` component
+degenerates to "first valid row wins" and is handled apart), then an
+Arrow UDF replays the reference's scan order over partitions of whole
+components.  Rows in singleton components pass through the same code
+path.
 """
 
 from __future__ import annotations
 
-import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+
+from .graph import connected_components
 
 
 def release_dedupe_cache() -> None:
@@ -36,7 +37,7 @@ def release_dedupe_cache() -> None:
 def two_key_or_anti_join(
     candidates: DataFrame, seen: DataFrame, url_col: str = "url", uid_col: str = "uid"
 ) -> DataFrame:
-    """Set-semantics D1: drop candidates matching the *persisted* seen
+    """Set-semantics D1: drop candidates matching the *stored* seen
     table on either key.  (Batch-internal ordering handled by
     ``sequential_or_dedupe``.)"""
     seen_urls = seen.select(F.col(url_col)).where(F.col(url_col).isNotNull()).distinct()
@@ -46,26 +47,38 @@ def two_key_or_anti_join(
     )
 
 
-def _scan_component(pdf: pd.DataFrame) -> pd.DataFrame:
-    pdf = pdf.sort_values("ord")
+_SCAN_SCHEMA = "ord BIGINT, url STRING, uid STRING, seen_hit BOOLEAN, comp BIGINT, forced BOOLEAN"
+
+
+def _scan_rows(batches):
+    """The reference's scan over one partition's rows in ``ord`` order;
+    sets of the urls and uids kept so far block later rows.  A
+    ``forced`` row (an injected pre-seen key, e.g. the empty-uid
+    survivor's url) always "survives" so its keys block later rows."""
     urls: set = set()
     uids: set = set()
-    keep = []
-    forced = pdf["forced"] if "forced" in pdf.columns else None
-    for i, r in enumerate(pdf.itertuples()):
-        if forced is not None and forced.iloc[i]:
-            # injected pre-seen key (e.g. the empty-uid survivor's url):
-            # always "survives" so its keys block later rows.
-            keep.append(True)
-            urls.add(r.url)
-            uids.add(r.uid)
-        elif r.seen_hit or r.url in urls or r.uid in uids:
-            keep.append(False)
-        else:
-            keep.append(True)
-            urls.add(r.url)
-            uids.add(r.uid)
-    return pdf[pd.Series(keep, index=pdf.index)]
+    for pdf in batches:
+        keep = []
+        for r in pdf.itertuples():
+            k = r.forced or not (r.seen_hit or r.url in urls or r.uid in uids)
+            keep.append(k)
+            if k:
+                urls.add(r.url)
+                uids.add(r.uid)
+        yield pdf.loc[keep]
+
+
+def _scan(rows: DataFrame) -> DataFrame:
+    """``_scan_rows`` over partitions of whole components.  Components
+    share no url or uid (the forced rows' keys, shared, act alike in
+    every component), so one scan over several components in ``ord``
+    order keeps what scanning each alone keeps, without a pandas call
+    per component."""
+    return (
+        rows.repartition("comp")
+        .sortWithinPartitions("ord")
+        .mapInPandas(_scan_rows, schema=_SCAN_SCHEMA)
+    )
 
 
 def sequential_or_dedupe(
@@ -74,7 +87,6 @@ def sequential_or_dedupe(
     url_col: str = "url",
     uid_col: str = "uid",
     ord_col: str = "ord",
-    max_iters: int = 50,
 ) -> DataFrame:
     """Exact replay of ``SaveUrlsToDb`` batch semantics, distributed.
 
@@ -109,9 +121,10 @@ def sequential_or_dedupe(
         )
         .drop("_hu", "_hd")
         # NULL keys match nothing (SQL `=` semantics in the reference's
-        # WHERE result_url=%s OR user_id=%s probe), but the propagation
-        # and scan joins below would DROP a NULL join key instead of
-        # keeping the row as a singleton.  Substitute a per-row sentinel
+        # WHERE result_url=%s OR user_id=%s probe), but the component
+        # windows below would group all NULL keys together and the
+        # blocker join would drop them, instead of keeping each such
+        # row as a singleton.  Substitute a per-row sentinel
         # after the seen-hit joins (which correctly saw the NULLs):
         # unique per ord, so it collides with no other row's key.
         .withColumn(
@@ -122,7 +135,7 @@ def sequential_or_dedupe(
             "uid",
             F.coalesce(F.col("uid"), F.concat(F.lit("\x00nulluid:"), F.col("ord").cast("string"))),
         )
-        .persist()
+        .localCheckpoint()
     )
 
     # The uid='' quirk makes every empty-uid row one giant component
@@ -135,40 +148,23 @@ def sequential_or_dedupe(
     empties = c.where(F.col("uid") == "")
     nonempty = c.where(F.col("uid").isNull() | (F.col("uid") != ""))
 
-    # min-label propagation over the url/uid key graph (non-empty rows
-    # only — components are small without the '' hub).  Persist per
-    # iteration so lineage (and recomputation) stays O(1) per round.
-    lab = nonempty.withColumn("comp", F.col("ord")).persist()
-    # `lab` after the first iteration is a DERIVED projection of the
-    # persisted `nxt` — unpersisting the derivation is a no-op on the
-    # cache entry, so track the actually-persisted frame explicitly
-    # (one leaked frame per iteration otherwise).
-    lab_cached = lab
-    for _ in range(max_iters):
-        by_url = lab.groupBy("url").agg(F.min("comp").alias("_cu"))
-        by_uid = lab.groupBy("uid").agg(F.min("comp").alias("_cd"))
-        nxt = (
-            lab.join(by_url, "url")
-            .join(by_uid, "uid")
-            .withColumn("_new", F.least("comp", "_cu", "_cd"))
-            .persist()
-        )
-        changed = nxt.where(F.col("_new") != F.col("comp")).limit(1).count()
-        lab = nxt.withColumn("comp", F.col("_new")).drop("_cu", "_cd", "_new")
-        lab_cached.unpersist()
-        lab_cached = nxt
-        if changed == 0:
-            break
-
-    scan_schema = (
-        "ord BIGINT, url STRING, uid STRING, seen_hit BOOLEAN, comp BIGINT, forced BOOLEAN"
+    # Components of the url/uid key graph over the non-empty rows
+    # (small without the '' hub).  Star edges — each row to the min ord
+    # sharing its url, and to the min ord sharing its uid — connect
+    # exactly the rows the key cliques do, so the min-ord labels match.
+    star = [
+        nonempty.select("ord", F.min("ord").over(Window.partitionBy(k)).alias("_m"))
+        for k in ("url", "uid")
+    ]
+    comps = connected_components(star[0].unionByName(star[1]), "ord", "_m")
+    lab = nonempty.join(
+        comps.select(F.col("id").alias("ord"), F.col("component").alias("comp")), "ord"
     )
+
     base = lab.select("ord", "url", "uid", "seen_hit", "comp").withColumn(
         "forced", F.lit(False)
     )
-    s0 = (
-        base.groupBy("comp").applyInPandas(_scan_component, schema=scan_schema).persist()
-    )
+    s0 = _scan(base).localCheckpoint()
 
     # e* = first empty-uid candidate not seen and not url-blocked by an
     # earlier non-empty survivor.  (Survivors before e*.ord cannot be
@@ -209,12 +205,7 @@ def sequential_or_dedupe(
                 F.lit(True).alias("forced"),
             )
         )
-        rescanned = (
-            aff_rows.unionByName(inject)
-            .groupBy("comp")
-            .applyInPandas(_scan_component, schema=scan_schema)
-            .where(~F.col("forced"))
-        )
+        rescanned = _scan(aff_rows.unionByName(inject)).where(~F.col("forced"))
         survivors = (
             s0.join(F.broadcast(affected), "comp", "left_anti")
             .unionByName(rescanned)
@@ -222,12 +213,9 @@ def sequential_or_dedupe(
             .unionByName(spark.createDataFrame([(e_ord,)], "ord BIGINT"))
         )
 
-    out = candidates.join(
+    return candidates.join(
         survivors.withColumnRenamed("ord", ord_col), ord_col, "left_semi"
     ).localCheckpoint()
-    for f in (c, lab_cached, s0):
-        f.unpersist()
-    return out
 
 
 def skip_if_exists(

@@ -30,12 +30,15 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+# Label-propagation rounds before ``connected_components`` stops; a
+# round per unit of graph diameter.
+MAX_ROUNDS = 50
+
 
 def connected_components(
     edges: DataFrame,
     src_col: str = "doc_a",
     dst_col: str = "doc_b",
-    max_rounds: int = 50,
 ) -> DataFrame:
     """(id, component) for every vertex appearing in ``edges``;
     ``component`` = min vertex id reachable (deterministic canonical
@@ -54,7 +57,7 @@ def connected_components(
         .select("id", F.col("id").alias("label"))
         .localCheckpoint()
     )
-    for _ in range(max_rounds):
+    for _ in range(MAX_ROUNDS):
         nb = (
             sym.join(labels, sym["src"] == labels["id"])
             .groupBy(F.col("dst").alias("id2"))
@@ -170,7 +173,6 @@ def connected_components_incremental(
     dst_col: str = "doc_b",
     id_col: str = "id",
     comp_col: str = "component",
-    max_rounds: int = 50,
     broadcast_delta: bool = True,
 ) -> DataFrame:
     """Fold a NEW wave's near-dup edges into COMMITTED component
@@ -258,7 +260,7 @@ def connected_components_incremental(
         .where(F.col("src_lbl") != F.col("dst_lbl"))
         .distinct()
     )
-    merged = connected_components(lbl_edges, "src_lbl", "dst_lbl", max_rounds)
+    merged = connected_components(lbl_edges, "src_lbl", "dst_lbl")
     mapping = merged.select(
         F.col("id").alias("_from"), F.col("component").alias("_to")
     ).localCheckpoint()

@@ -10,32 +10,27 @@ stage only exists at training-data scale.
 The whole operator is one global *exclusive prefix sum* over token
 counts plus per-row arithmetic.  A naive Spark prefix sum is a window
 over ``Window.orderBy(order_col)`` — a single-partition global sort
-that dies at corpus scale.  Instead the classic two-phase scan:
-
-1. range-bucket rows by the order key (``n_buckets`` contiguous
-   ranges, so bucket order == global order);
-2. per-bucket token totals -> driver (``n_buckets`` longs — bounded by
-   configuration, not data), exclusive-prefix them, broadcast the
-   offsets back;
-3. an intra-bucket window (bounded by corpus/n_buckets rows, runs in
-   parallel across buckets) plus the bucket offset gives every doc its
-   exact global start token.
+that dies at corpus scale.  Instead rows are range-bucketed by the
+order key (``n_buckets`` contiguous ranges, so bucket order == global
+order) and ``skew.bucketed_scan`` sums per bucket and windows within
+each bucket.
 
 From ``start`` the chunk assignment is pure per-row math: the doc
 covers tokens ``[start, start+toks)`` and lands in chunks
 ``start div B .. (start+toks-1) div B`` — emitted with
 ``sequence``+``explode`` (fan-out per doc = #chunks it touches, ~1).
 At 100 TB: n_buckets scales with the cluster (one window partition per
-bucket), the only shuffles are the bucket groupBy (tiny) and the
-window repartition; everything else is codegen map-side arithmetic.
+bucket); everything but the scan is codegen map-side arithmetic.
 """
 
 from __future__ import annotations
 
 import math
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from .skew import bucketed_scan
 
 
 def global_token_starts(
@@ -50,52 +45,18 @@ def global_token_starts(
     what keeps bucket order aligned with global order).  Rows with
     ``token_col <= 0`` are dropped — they occupy no tokens.
 
-    Driver-bounded actions: one (min, max) row and one ``n_buckets``-row
-    collect — both O(configuration), never O(data).
+    The token projection is local-checkpointed once, so tokenization
+    runs once for the one (min, max) driver job and the scan.
     """
-    d = docs.where(F.col(token_col) > 0)
-    # the (min,max) and bucket-totals driver jobs both scan the token
-    # projection — persist it across them so tokenization runs once for
-    # the control-flow jobs (the final pass recomputes it streaming,
-    # nothing stays pinned)
-    base = d
-    base.persist()
-    try:
-        lo, hi = d.agg(F.min(order_col), F.max(order_col)).first()
-        if lo is None:
-            return docs.where(F.col(token_col) > 0).withColumn(
-                "_start", F.lit(0).cast("long")
-            )
-        span = max(1, math.ceil((int(hi) - int(lo) + 1) / n_buckets))
-        d = d.withColumn(
-            "_bkt", F.expr(f"(cast({order_col} as long) - {int(lo)}) div {span}")
-        )
-        totals = {
-            r["_bkt"]: r["tot"]
-            for r in d.groupBy("_bkt").agg(F.sum(token_col).alias("tot")).collect()
-        }
-    finally:
-        base.unpersist()
-    offsets, acc = [], 0
-    for b in range(n_buckets):
-        offsets.append((b, acc))
-        acc += int(totals.get(b, 0))
-    off = d.sparkSession.createDataFrame(offsets, "_bkt long, _off long")
-    w = (
-        Window.partitionBy("_bkt")
-        .orderBy(order_col)
-        .rowsBetween(Window.unboundedPreceding, -1)
+    d = docs.where(F.col(token_col) > 0).localCheckpoint()
+    lo, hi = d.agg(F.min(order_col), F.max(order_col)).first()
+    if lo is None:
+        return d.withColumn("_start", F.lit(0).cast("long"))
+    span = max(1, math.ceil((int(hi) - int(lo) + 1) / n_buckets))
+    b = d.withColumn(
+        "_bkt", F.expr(f"(cast({order_col} as long) - {int(lo)}) div {span}")
     )
-    return (
-        d.join(F.broadcast(off), "_bkt")
-        .withColumn(
-            "_start",
-            (F.col("_off") + F.coalesce(F.sum(token_col).over(w), F.lit(0))).cast(
-                "long"
-            ),
-        )
-        .drop("_bkt", "_off")
-    )
+    return bucketed_scan(b, [], ["_bkt"], [order_col], "_start", token_col).drop("_bkt")
 
 
 def pack_training_chunks(
@@ -155,9 +116,8 @@ def budget_select(
 
     The global order is folded into ONE numeric key
     ``(1000 - quality) * K + id`` (quality is integer per-mille; K >
-    max id makes the fold order-exact), so the existing two-phase
-    range-bucket prefix sum does the cumsum without a single-partition
-    sort; the keep test ``start + tokens <= budget`` is per-row math.
+    max id makes the fold order-exact), so ``global_token_starts``
+    does the cumsum without a single-partition sort; the keep test ``start + tokens <= budget`` is per-row math.
     Because the cumsum is monotone, that predicate IS a prefix — the
     first doc that would cross the budget line and everything after it
     drop together.  Adds ``cum_tokens`` (the doc's inclusive cumsum)

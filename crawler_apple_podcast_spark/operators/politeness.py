@@ -10,12 +10,9 @@ corpus' own ``robots.txt`` rows (broadcast as a tiny dim table).
 Scale note: ranking "top-B per host" with a window over ``host`` puts
 the whole ``amp-api.podcasts.apple.com`` skew bucket in ONE task — at
 the 10^10-URL target that single sorted partition is the job.  The
-gate instead ranks with ``hash_bucketed_host_rank``: the top bits of
-the uniform url hash are an order-aligned salt, so the hot host spans
-many window partitions, and one tiny ``(host, priority, bucket)``
-count aggregate turns each partition-local row number into the exact
-per-host rank — one shuffle of the frontier, no range-sampling pass,
-no persisted intermediate.
+gate instead ranks with ``hash_bucketed_host_rank``, which hands
+``skew.bucketed_scan`` the top bits of the uniform url hash as its
+order-aligned bucket.
 
 ``deferred`` falls out as ``rank > budget`` — no anti-join needed.
 
@@ -32,10 +29,11 @@ the benchmark that pins it changes.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.urls import host_of, url_hash
+from .skew import bucketed_scan
 
 
 def release_rank_cache() -> None:
@@ -73,35 +71,19 @@ def hash_bucketed_host_rank(
     out_col: str = "_rn",
     n_buckets: int = 32,
 ) -> DataFrame:
-    """Exact per-host rank by ``(priority, hash, tiebreak)`` with no
-    single-task window AND no ``repartitionByRange`` sampling pass.
-
-    The hash column is uniform, so its top bits are an ORDER-ALIGNED
-    salt: for equal priority, signed(hash_a) < signed(hash_b) implies
-    bucket_a <= bucket_b (arithmetic shift keeps signed order).  The
-    skewed host therefore spreads over ``n_buckets`` ordinary window
-    partitions, and the global per-host rank is
-    ``local row_number + offset``, where offsets come from one tiny
-    (host, priority, bucket) count aggregate.  Exactly one shuffle of
-    the big frame, no sampling job, no persist."""
+    """Exact per-host rank by ``(priority, hash, tiebreak)`` as an int
+    ``out_col``, via ``skew.bucketed_scan``.  The hash column is
+    uniform, so its top ``log2(n_buckets)`` bits are an order-aligned
+    bucket (an arithmetic shift keeps signed order) and the skewed host
+    spreads over ``n_buckets`` window partitions."""
     if n_buckets & (n_buckets - 1) != 0:
         raise ValueError(f"n_buckets must be a power of two, got {n_buckets}")
     k = n_buckets.bit_length() - 1
     b = df.withColumn("_bkt", F.shiftright(F.col(hash_col), 64 - k).cast("int"))
-    cnt = b.groupBy(host_col, priority_col, "_bkt").agg(F.count(F.lit(1)).alias("_c"))
-    ow = (
-        Window.partitionBy(host_col)
-        .orderBy(priority_col, "_bkt")
-        .rowsBetween(Window.unboundedPreceding, -1)
+    ranked = bucketed_scan(
+        b, [host_col], [priority_col, "_bkt"], [hash_col, tiebreak_col], out_col
     )
-    off = cnt.withColumn("_off", F.coalesce(F.sum("_c").over(ow), F.lit(0))).drop("_c")
-    lw = Window.partitionBy(host_col, priority_col, "_bkt").orderBy(
-        hash_col, tiebreak_col
-    )
-    ranked = b.join(off, [host_col, priority_col, "_bkt"]).withColumn(
-        out_col, (F.row_number().over(lw) + F.col("_off")).cast("int")
-    )
-    return ranked.drop("_bkt", "_off")
+    return ranked.withColumn(out_col, F.col(out_col).cast("int")).drop("_bkt")
 
 
 def politeness_rank(
@@ -127,8 +109,6 @@ def politeness_rank(
     else:
         f = f.withColumn("_budget", F.lit(default_budget))
 
-    # Order-aligned hash-prefix salting: the skewed host spans many
-    # window partitions, no range-sampling pass, no cached intermediate.
     ranked = hash_bucketed_host_rank(f, "_host", priority_col, "_uh", url_col)
     return ranked.withColumn("_scheduled", F.col("_rn") <= F.col("_budget")).drop(
         "_host", "_uh", "_budget", "_rn"

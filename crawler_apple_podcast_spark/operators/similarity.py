@@ -942,7 +942,9 @@ def cosine_topk_lsh(
     from itertools import combinations
 
     dim = len(query)
-    sigs = hyperplane_signatures(embeddings, dim, n_planes, seed, id_col, vec_col)
+    # NULL vectors have no bucket (and no cosine): dropped at the door.
+    live = embeddings.where(F.col(vec_col).isNotNull())
+    sigs = hyperplane_signatures(live, dim, n_planes, seed, id_col, vec_col)
     qbucket = query_bucket(query, n_planes, seed)
     probes = [
         qbucket ^ sum(1 << i for i in flip)

@@ -72,7 +72,6 @@ class WaveConfig:
     # semantics, crawler_podcasts.py:81), instead of resetting the
     # budget every wave.  See operators/politeness.py pacing section.
     use_rate_pacing: bool = False
-    default_budget: int = 1 << 30
     # Exponential-backoff retries of failed fetches (operators/retry.py):
     # None = off (the reference's behavior — failures are lost,
     # crawler_podcasts.py:28-30 — and the e1 parity oracles assume it);
@@ -218,37 +217,16 @@ def run_crawl(
     """
     cfg = cfg or WaveConfig()
     fetcher = fetcher or make_join_fetcher(pages)
-    robots = parse_robots(pages).cache() if cfg.use_politeness else None
-    try:
-        return _crawl_waves(spark, seeds, cfg, store, resume, fetcher, robots)
-    finally:
-        # Released however the crawl ends; the outputs are checkpointed
-        # or read back from the store, so none needs the cached robots.
-        if robots is not None:
-            robots.unpersist()
-
-
-def _crawl_waves(
-    spark: SparkSession,
-    seeds: DataFrame,
-    cfg: WaveConfig,
-    store: SnapshotStore | None,
-    resume: bool,
-    fetcher,
-    robots: DataFrame | None,
-) -> CrawlOutputs:
-    budgets = (
-        host_budgets(robots, cfg.wave_seconds, DEFAULT_CRAWL_DELAY)
-        if cfg.use_politeness and robots is not None
-        else None
-    )
-    # Rate pacing: per-wave budgets derive from a carried credit
-    # ledger instead of resetting each wave.
-    pace_delays = (
-        host_delays(robots, DEFAULT_CRAWL_DELAY * 1000).localCheckpoint()
-        if cfg.use_politeness and cfg.use_rate_pacing and robots is not None
-        else None
-    )
+    # The one host-sized dim the crawl reads each wave, materialized
+    # once: the fixed budgets, or the delays that rate pacing turns
+    # into budgets from a carried credit ledger.
+    budgets = pace_delays = None
+    if cfg.use_politeness:
+        robots = parse_robots(pages)
+        if cfg.use_rate_pacing:
+            pace_delays = host_delays(robots, DEFAULT_CRAWL_DELAY * 1000).localCheckpoint()
+        else:
+            budgets = host_budgets(robots, cfg.wave_seconds, DEFAULT_CRAWL_DELAY).localCheckpoint()
     pace_carry: DataFrame | None = None
 
     frontier_schema = "seed_index INT, url STRING, priority INT"
@@ -300,9 +278,7 @@ def _crawl_waves(
                 else budgets
             )
             scheduled, deferred = split_ranked(
-                politeness_rank(
-                    f, wave_budgets, default_budget=cfg.default_budget
-                ).localCheckpoint()
+                politeness_rank(f, wave_budgets).localCheckpoint()
             )
             if pace_delays is not None:
                 counts = (

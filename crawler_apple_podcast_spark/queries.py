@@ -1897,6 +1897,34 @@ _CORPUS_PREP_CC_ORACLE = (
 ).format(stop=_STOP_SQL, qthr=600, jthr=500)
 
 
+def _prep_scores(d: DataFrame) -> DataFrame:
+    """``(doc_id, text, quality_milli, _stop_m, n_tokens)``: the corpus-prep
+    gate stats (``_CORPUS_PREP_BASE``'s q0), each derived from one
+    tokenization.  Catalyst does not CSE across higher-order functions,
+    so deriving every stat straight from ``text`` would re-split the
+    document per column.  Semantics identical to
+    T.quality_score_milli / T.lang_id / token counts."""
+    stops = F.array(*[F.lit(s) for s in STOPWORDS])
+    t1 = d.select("doc_id", "text", T.tokens(F.col("text")).alias("_tk"))
+    n_tokens = F.size("_tk").cast("long")
+    n_stop = F.size(F.filter("_tk", lambda x: F.array_contains(stops, x))).cast("long")
+    stop_m = idiv(n_stop * F.lit(1000), n_tokens)
+    alpha = F.length(F.regexp_replace("text", r"[^A-Za-z]", "")).cast("long")
+    alpha_m = idiv(alpha * F.lit(1000), F.length("text").cast("long"))
+    len_m = (
+        F.when((n_tokens >= 20) & (n_tokens <= 1000), F.lit(1000))
+        .otherwise(F.lit(200))
+        .cast("long")
+    )
+    return t1.select(
+        "doc_id",
+        "text",
+        idiv(stop_m + alpha_m + len_m, F.lit(3)).alias("quality_milli"),
+        stop_m.alias("_stop_m"),
+        n_tokens.alias("n_tokens"),
+    )
+
+
 def corpus_prep_frame(
     d: DataFrame,
     quality_threshold: int = 600,
@@ -1921,29 +1949,12 @@ def corpus_prep_frame(
     signature groupBy-min (map-side combined to one row per doc per
     partition, all hashes codegen'd) — at 100 TB the near-dup stage
     only ever touches docs that survive the cheap gates."""
-    # Tokenize ONCE in a dedicated projection (the lambda re-eval trap:
-    # Catalyst does not CSE across higher-order functions, so deriving
-    # every stat straight from `text` re-splits the document per
-    # column), then derive all gate stats from the array.  Semantics
-    # identical to T.quality_score_milli / T.lang_id / token counts.
-    stops = F.array(*[F.lit(s) for s in STOPWORDS])
-    t1 = d.select("doc_id", "text", T.tokens(F.col("text")).alias("_tk"))
-    n_tokens = F.size("_tk").cast("long")
-    n_stop = F.size(F.filter("_tk", lambda x: F.array_contains(stops, x))).cast("long")
-    stop_m = idiv(n_stop * F.lit(1000), n_tokens)
-    alpha = F.length(F.regexp_replace("text", r"[^A-Za-z]", "")).cast("long")
-    alpha_m = idiv(alpha * F.lit(1000), F.length("text").cast("long"))
-    len_m = (
-        F.when((n_tokens >= 20) & (n_tokens <= 1000), F.lit(1000))
-        .otherwise(F.lit(200))
-        .cast("long")
-    )
-    scored = t1.select(
+    scored = _prep_scores(d).select(
         "doc_id",
         "text",
-        idiv(stop_m + alpha_m + len_m, F.lit(3)).alias("quality_milli"),
-        stop_m.alias("_stop_m"),
-        n_tokens.alias("n_tokens"),
+        "quality_milli",
+        "_stop_m",
+        "n_tokens",
         T.token_count_bpe(F.col("text")).alias("n_bpe"),
     )
     kept = scored.where(
@@ -1995,25 +2006,8 @@ def corpus_budget_select(spark, sf):
     """Greedy quality-prefix selection at a 12k-token global budget."""
     from .operators import packing as PK
 
-    d = _t(spark, sf, "documents")
-    stops = F.array(*[F.lit(s) for s in STOPWORDS])
-    t1 = d.select("doc_id", "text", T.tokens(F.col("text")).alias("_tk"))
-    n_tokens = F.size("_tk").cast("long")
-    n_stop = F.size(F.filter("_tk", lambda x: F.array_contains(stops, x))).cast(
-        "long"
-    )
-    stop_m = idiv(n_stop * F.lit(1000), n_tokens)
-    alpha = F.length(F.regexp_replace("text", r"[^A-Za-z]", "")).cast("long")
-    alpha_m = idiv(alpha * F.lit(1000), F.length("text").cast("long"))
-    len_m = (
-        F.when((n_tokens >= 20) & (n_tokens <= 1000), F.lit(1000))
-        .otherwise(F.lit(200))
-        .cast("long")
-    )
-    scored = t1.select(
-        "doc_id",
-        idiv(stop_m + alpha_m + len_m, F.lit(3)).alias("quality_milli"),
-        n_tokens.alias("n_tokens"),
+    scored = _prep_scores(_t(spark, sf, "documents")).select(
+        "doc_id", "quality_milli", "n_tokens"
     )
     return PK.budget_select(scored, "n_tokens", 12000, "quality_milli")
 

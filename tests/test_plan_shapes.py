@@ -357,6 +357,9 @@ def test_wave_loop_jobs_per_wave(spark, corpus, tmp_path, job_group, wave_second
         "dedup_semantic",
         "crawl_redirect_resolve",
         "crawl_canonical_alias",
+        "pack_sequences",
+        "corpus_budget_select",
+        "crawl_budget_apportion",
     ],
 )
 def test_catalog_entry_leaves_no_persisted_frame(spark, qs, persisted_frames, name):

@@ -7,6 +7,7 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
+from crawler_apple_podcast_spark.operators import clustering as CL
 from crawler_apple_podcast_spark.operators import similarity as S
 
 SF = "/root/testdata/sf0.001"
@@ -456,6 +457,34 @@ def test_vector_ops_drop_null_vectors_and_empty_corpus(spark, op):
     assert want
     assert sorted(fn(with_null, with_null).collect()) == want
     assert fn(with_null, spark.createDataFrame([], schema)).count() == 0
+
+
+_NULL_DROPPING_OPS = {
+    "cosine_topk_lsh": lambda df: S.cosine_topk_lsh(df, [0.5] * 8, k=5, n_planes=4),
+    "kmeans_lloyd": lambda df: CL.kmeans_lloyd(df, 4, n_iter=1)[0],
+    "semantic_dedup": lambda df: CL.semantic_dedup(df, 4, 300),
+}
+
+
+@pytest.mark.parametrize("op", sorted(_NULL_DROPPING_OPS))
+def test_bucket_and_cluster_ops_skip_null_vectors(spark, op):
+    """A NULL vector has no hyperplane bucket and no cell: the LSH top-k
+    and k-means drop it at the door and return what they return without
+    it; ``semantic_dedup`` returns it with ``keep`` true and a NULL
+    ``cell``, so filtering on ``keep`` never loses the document."""
+    schema = "vec_id INT, embedding ARRAY<FLOAT>"
+    rng = np.random.RandomState(3)
+    rows = [(i, [float(x) for x in rng.randn(8)]) for i in range(40)]
+    fn = _NULL_DROPPING_OPS[op]
+    want = sorted(fn(spark.createDataFrame(rows, schema)).collect())
+    assert want
+    got = fn(spark.createDataFrame(rows + [(40, None)], schema)).collect()
+    assert sorted(r for r in got if r.vec_id != 40) == want
+    null_rows = [r.asDict() for r in got if r.vec_id == 40]
+    if op == "semantic_dedup":
+        assert null_rows == [{"vec_id": 40, "cell": None, "keep": True}]
+    else:
+        assert null_rows == []
 
 
 def test_incremental_probe_equals_batch_restriction(spark):

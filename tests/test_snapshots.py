@@ -145,8 +145,9 @@ def test_resume_is_noop_when_frontier_exhausted(spark, corpus, tmp_path):
 
 
 def test_crawl_releases_its_persisted_frames(spark, corpus, tmp_path, persisted_frames):
-    """run_crawl caches the robots dim table for its waves and must
-    unpersist it on return, with or without a snapshot store."""
+    """run_crawl local-checkpoints its host dim table and persists
+    nothing, so it leaves no persisted frame, with or without a
+    snapshot store."""
     pages, seeds = corpus
     for store in (None, SnapshotStore(spark, str(tmp_path / "s"))):
         before = persisted_frames()
