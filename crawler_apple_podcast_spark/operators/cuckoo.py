@@ -18,10 +18,12 @@ buys a crawl ledger over Bloom:
   the exact anti-join confirms, output is byte-equal to the exact
   computation (``cuckoo_gated_anti_join``).
 
-Sharding mirrors operators/bloom.py: ``shard = h1 & (n_shards-1)``,
-one grouped Arrow UDF builds each shard, probes are one vectorized
-numpy gather over the broadcast flat table.  Hashes are JVM-side
-``xxhash64`` before the Arrow boundary.
+The gate mechanics are operators/bloom.py's: the JVM-side ``xxhash64``
+pair, the sharded build (one grouped Arrow UDF per
+``shard = pmod(h1, n_shards)``), the probe over the broadcast flat
+table and the checkpointed exact confirm.  This module supplies only
+what makes the filter a cuckoo filter: the fingerprint geometry, the
+per-shard placement, the two-bucket-plus-overflow hit test and deletes.
 
 Scale shape: build is embarrassingly parallel ACROSS shards; WITHIN a
 shard the bulk insert is two vectorized placement passes (first-choice
@@ -49,16 +51,13 @@ collider's copy — the one way to manufacture a false negative — so
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass, field, replace
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
-from ..functions.urls import url_hash
+from .bloom import _build_shards, _gated_anti_join, _key_confirm, _probe_shards, _with_hashes
 
-_H2_SEED = 0x9E3779B9
 _FP_MULT = np.uint64(0x5BD1E995)  # odd mixer for i2 = i1 ^ h(fp)
 
 
@@ -81,12 +80,6 @@ def _fp_buckets(h1: np.ndarray, h2: np.ndarray, n_buckets: int):
     i1 = (h1.astype(np.uint64) >> np.uint64(8)) & mask
     i2 = i1 ^ ((fp.astype(np.uint64) * _FP_MULT) & mask)
     return fp, i1.astype(np.int64), i2.astype(np.int64)
-
-
-def _with_hashes(df: DataFrame, key_col: str) -> DataFrame:
-    return df.withColumn("_h1", url_hash(F.col(key_col))).withColumn(
-        "_h2", url_hash(F.col(key_col), _H2_SEED)
-    )
 
 
 def _bulk_place(fp, i1, i2, n_buckets, slots, max_kicks, rng_seed):
@@ -162,12 +155,10 @@ def build_cuckoo_shards(
     expected_items: int | None = None,
     max_kicks: int = 500,
 ) -> CuckooShards:
-    """Distributed build: one Arrow group per shard, driver assembly
-    for broadcast probing (the Bloom module's fast-path twin).  Size
-    via ``expected_items`` to ~90% load (or pass ``buckets_per_shard``,
-    a power of two)."""
-    if n_shards & (n_shards - 1) != 0:
-        raise ValueError(f"n_shards must be a power of two, got {n_shards}")
+    """Distributed build through the gate's sharded build
+    (``bloom._build_shards``: one Arrow group per shard, driver
+    assembly for broadcast probing).  Size via ``expected_items`` to
+    ~90% load (or pass ``buckets_per_shard``, a power of two)."""
     if buckets_per_shard is None:
         per_shard = max(64, (expected_items or 1_000_000) // n_shards)
         # ~90% target load: buckets = items / (slots * 0.9)
@@ -177,31 +168,17 @@ def build_cuckoo_shards(
         raise ValueError("buckets_per_shard must be a power of two")
     nb, sl = buckets_per_shard, slots
 
-    def build(pdf: pd.DataFrame) -> pd.DataFrame:
-        shard = int(pdf["_shard"].iloc[0])
-        h1 = pdf["_h1"].to_numpy()
-        h2 = pdf["_h2"].to_numpy()
+    def kernel(shard: int, h1: np.ndarray, h2: np.ndarray) -> dict:
         fp, i1, i2 = _fp_buckets(h1, h2, nb)
-        # ONE copy per distinct key (the input is pre-distinct'd);
+        # ONE copy per distinct key (the input is distinct'd below);
         # identical (fp, i1) pairs from DIFFERENT keys keep separate
         # copies on purpose — deletion safety (module docstring).
         table, ovf = _bulk_place(fp, i1, i2, nb, sl, max_kicks, rng_seed=shard)
-        return pd.DataFrame(
-            {
-                "shard": [shard],
-                "table": [table.tobytes()],
-                "overflow": [ovf.tobytes()],
-                "n": [len(pdf)],
-            }
-        )
+        return {"table": table.tobytes(), "overflow": ovf.tobytes()}
 
-    hashed = _with_hashes(seen.select(key_col).distinct(), key_col).withColumn(
-        "_shard", F.pmod(F.col("_h1"), F.lit(n_shards)).cast("int")
-    )
-    rows = (
-        hashed.groupBy("_shard")
-        .applyInPandas(build, "shard int, table binary, overflow binary, n long")
-        .collect()
+    rows = _build_shards(
+        seen.select(key_col).distinct(), key_col, n_shards, kernel,
+        "table BINARY, overflow BINARY",
     )
     return CuckooShards(
         n_shards=n_shards,
@@ -215,48 +192,26 @@ def build_cuckoo_shards(
     )
 
 
-def probe_cuckoo(
-    df: DataFrame,
-    filt: CuckooShards,
-    key_col: str = "url",
-    out_col: str = "maybe_seen",
-) -> DataFrame:
-    """Add ``out_col``: fingerprint present in either candidate bucket
-    (or the shard's overflow list).  One flat uint16 gather per Arrow
-    batch over the broadcast table — no per-shard Python loop."""
-    spark = df.sparkSession
-    nb, sl, n_shards = filt.n_buckets, filt.slots, filt.n_shards
-    flat = np.zeros(n_shards * nb * sl, dtype=np.uint16)
-    for s, b in filt.shards.items():
-        flat[s * nb * sl : (s + 1) * nb * sl] = np.frombuffer(b, dtype=np.uint16)
-    ovf = {
-        s: np.frombuffer(b, dtype=np.uint16) for s, b in filt.overflow.items()
-    }
-    bc = spark.sparkContext.broadcast((flat, ovf))
+def probe_cuckoo(df: DataFrame, filt: CuckooShards, key_col: str = "url") -> DataFrame:
+    """Add ``maybe_seen``: fingerprint present in either candidate bucket
+    (or the shard's overflow list)."""
+    nb, sl = filt.n_buckets, filt.slots
+    overflow = {s: np.frombuffer(b, dtype=np.uint16) for s, b in filt.overflow.items()}
 
-    @F.pandas_udf("boolean")
-    def _probe(h1: pd.Series, h2: pd.Series) -> pd.Series:
-        table, overflow = bc.value
-        h1np = h1.to_numpy()
-        shard = (h1np & (n_shards - 1)).astype(np.int64)
-        fp, i1, i2 = _fp_buckets(h1np, h2.to_numpy(), nb)
+    def hit(table, shard, h1, h2):
+        fp, i1, i2 = _fp_buckets(h1, h2, nb)
         base = shard * (nb * sl)
-        hit = np.zeros(len(h1np), dtype=bool)
+        out = np.zeros(len(h1), dtype=bool)
         for b in (i1, i2):
             rows = base[:, None] + b[:, None] * sl + np.arange(sl)[None, :]
-            hit |= np.any(table[rows] == fp[:, None], axis=1)
-        if overflow:
-            for s, fps in overflow.items():
-                m = shard == s
-                if m.any():
-                    hit[m] |= np.isin(fp[m], fps)
-        return pd.Series(hit)
+            out |= np.any(table[rows] == fp[:, None], axis=1)
+        for s, fps in overflow.items():
+            m = shard == s
+            if m.any():
+                out[m] |= np.isin(fp[m], fps)
+        return out
 
-    return (
-        _with_hashes(df, key_col)
-        .withColumn(out_col, _probe("_h1", "_h2"))
-        .drop("_h1", "_h2")
-    )
+    return _probe_shards(df, key_col, filt.n_shards, filt.shards, np.uint16, nb * sl, hit)
 
 
 def delete_from_cuckoo(
@@ -278,46 +233,30 @@ def delete_from_cuckoo(
     the same reason, do NOT re-delete a key across calls: after its
     copy is gone, a second delete can only hit a collider's copy.
     Callers that cannot guarantee this must rebuild instead."""
-    nb, sl, n_shards = filt.n_buckets, filt.slots, filt.n_shards
-    tables = {
-        s: np.frombuffer(b, dtype=np.uint16).copy() for s, b in filt.shards.items()
-    }
-    ovf = {
-        s: list(np.frombuffer(b, dtype=np.uint16)) for s, b in filt.overflow.items()
-    }
-    rows = (
-        _with_hashes(deletes.select(key_col).distinct(), key_col)
-        .select("_h1", "_h2")
-        .collect()
-    )
+    nb, sl = filt.n_buckets, filt.slots
+    tables = {s: np.frombuffer(b, dtype=np.uint16).copy() for s, b in filt.shards.items()}
+    ovf = {s: list(np.frombuffer(b, dtype=np.uint16)) for s, b in filt.overflow.items()}
+    rows = _with_hashes(deletes.select(key_col).distinct(), key_col).select("_h1", "_h2").collect()
+    h1 = np.array([r["_h1"] for r in rows], dtype=np.int64)
+    fp, i1, i2 = _fp_buckets(h1, np.array([r["_h2"] for r in rows], dtype=np.int64), nb)
+    shard = h1 & (filt.n_shards - 1)
     n_deleted = 0
-    for r in rows:
-        h1 = np.array([r["_h1"]], dtype=np.int64)
-        h2 = np.array([r["_h2"]], dtype=np.int64)
-        shard = int(h1[0] & (n_shards - 1))
-        fp, i1, i2 = _fp_buckets(h1, h2, nb)
-        table = tables.get(shard)
-        done = False
-        if table is not None:
-            for b in (int(i1[0]), int(i2[0])):
-                row = table[b * sl : (b + 1) * sl]
-                idx = np.flatnonzero(row == fp[0])
-                if len(idx):
-                    row[idx[0]] = 0
-                    done = True
-                    break
-        if not done and shard in ovf and int(fp[0]) in ovf[shard]:
-            ovf[shard].remove(int(fp[0]))
-            done = True
-        n_deleted += int(done)
-    return CuckooShards(
-        n_shards=n_shards,
-        n_buckets=nb,
-        slots=sl,
+    for s, f, b1, b2 in zip(shard.tolist(), fp.tolist(), i1.tolist(), i2.tolist()):
+        for b in (b1, b2) if s in tables else ():
+            row = tables[s][b * sl : (b + 1) * sl]
+            idx = np.flatnonzero(row == f)
+            if len(idx):
+                row[idx[0]] = 0
+                n_deleted += 1
+                break
+        else:
+            if f in ovf.get(s, ()):
+                ovf[s].remove(f)
+                n_deleted += 1
+    return replace(
+        filt,
         shards={s: t.tobytes() for s, t in tables.items()},
-        overflow={
-            s: np.asarray(v, dtype=np.uint16).tobytes() for s, v in ovf.items() if v
-        },
+        overflow={s: np.asarray(v, dtype=np.uint16).tobytes() for s, v in ovf.items() if v},
         n_items=max(0, filt.n_items - n_deleted),
     )
 
@@ -330,14 +269,6 @@ def cuckoo_gated_anti_join(
 ) -> DataFrame:
     """Exact anti-join accelerated by the cuckoo gate: probe-negatives
     are definitely-new (no false negatives), probe-positives confirmed
-    by the exact anti-join — output byte-equal to the exact
-    computation, same contract as bloom_gated_anti_join.
-
-    The probed frame is local-checkpointed so both union branches read
-    one probe; it goes with the returned frame, and a lost executor
-    fails the job instead of re-probing."""
-    probed = probe_cuckoo(new, filt, key_col).localCheckpoint()
-    definitely_new = probed.where(~F.col("maybe_seen")).drop("maybe_seen")
-    suspects = probed.where(F.col("maybe_seen")).drop("maybe_seen")
-    confirmed = suspects.join(seen.select(key_col), key_col, "left_anti")
-    return definitely_new.unionByName(confirmed)
+    by the exact key anti-join — output byte-equal to the exact
+    computation, the same gate as ``bloom_gated_anti_join``."""
+    return _gated_anti_join(probe_cuckoo(new, filt, key_col), _key_confirm(seen, key_col), None)

@@ -20,14 +20,15 @@ diameter per round — noted, not needed for this workload.  Lineage is
 truncated per round with ``localCheckpoint`` (the loop would otherwise
 stack an unbounded plan).
 
-The fixpoint check (`changed == 0`) is one aggregate per round —
-driver-bounded control flow over distributed data, the same pattern as
-the crawl wave loop (``plans/wave_loop.py``).
+The fixpoint check (`changed == 0`) reads an ``Observation`` on the
+frame each round checkpoints, so a round is one checkpoint and no
+separate count — driver-bounded control flow over distributed data,
+the same pattern as the crawl wave loop (``plans/wave_loop.py``).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame, Observation, Window
 from pyspark.sql import functions as F
 
 # Label-propagation rounds before ``connected_components`` stops; a
@@ -63,21 +64,16 @@ def connected_components(
             .groupBy(F.col("dst").alias("id2"))
             .agg(F.min("label").alias("nb_label"))
         )
-        new_labels = (
+        # The round's changed-label count rides on its checkpoint job.
+        obs = Observation()
+        labels = (
             labels.join(nb, labels["id"] == nb["id2"], "left")
-            .select(
-                "id",
-                F.least(
-                    F.col("label"), F.coalesce(F.col("nb_label"), F.col("label"))
-                ).alias("label"),
-                (F.coalesce(F.col("nb_label"), F.col("label")) < F.col("label")).alias(
-                    "_changed"
-                ),
-            )
-        ).localCheckpoint()
-        changed = new_labels.where(F.col("_changed")).limit(1).count()
-        labels = new_labels.drop("_changed")
-        if changed == 0:
+            .observe(obs, F.sum((F.col("nb_label") < F.col("label")).cast("long")).alias("changed"))
+            # least skips a NULL nb_label (a vertex with no in-edges)
+            .select("id", F.least("label", "nb_label").alias("label"))
+            .localCheckpoint()
+        )
+        if not obs.get["changed"]:  # NULL for a round over no rows
             break
     return labels.select(F.col("id"), F.col("label").alias("component"))
 

@@ -25,8 +25,6 @@ bucket); everything but the scan is codegen map-side arithmetic.
 
 from __future__ import annotations
 
-import math
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -52,10 +50,16 @@ def global_token_starts(
     lo, hi = d.agg(F.min(order_col), F.max(order_col)).first()
     if lo is None:
         return d.withColumn("_start", F.lit(0).cast("long"))
-    span = max(1, math.ceil((int(hi) - int(lo) + 1) / n_buckets))
-    b = d.withColumn(
-        "_bkt", F.expr(f"(cast({order_col} as long) - {int(lo)}) div {span}")
-    )
+    return _range_starts(d, token_col, order_col, int(lo), int(hi), n_buckets)
+
+
+def _range_starts(
+    d: DataFrame, token_col: str, order_col: str, lo: int, hi: int, n_buckets: int
+) -> DataFrame:
+    """``_start`` over ``n_buckets`` contiguous ranges of
+    ``[lo, hi]``, which must cover every ``order_col`` value."""
+    span = (hi - lo) // n_buckets + 1  # ceil((hi - lo + 1) / n_buckets), exact
+    b = d.withColumn("_bkt", F.expr(f"(cast({order_col} as long) - {lo}) div {span}"))
     return bucketed_scan(b, [], ["_bkt"], [order_col], "_start", token_col).drop("_bkt")
 
 
@@ -116,16 +120,22 @@ def budget_select(
 
     The global order is folded into ONE numeric key
     ``(1000 - quality) * K + id`` (quality is integer per-mille; K >
-    max id makes the fold order-exact), so ``global_token_starts``
-    does the cumsum without a single-partition sort; the keep test ``start + tokens <= budget`` is per-row math.
+    max id makes the fold order-exact), so the range-bucketed scan of
+    ``global_token_starts`` does the cumsum without a single-partition
+    sort; the keep test ``start + tokens <= budget`` is per-row math.
     Because the cumsum is monotone, that predicate IS a prefix — the
     first doc that would cross the budget line and everything after it
     drop together.  Adds ``cum_tokens`` (the doc's inclusive cumsum)
     for audit.  One extra O(1)-row driver job fetches max(id) for K.
+    Refused with ``ValueError``: NULL or fractional ids, negative ids,
+    quality that is not integer per-mille, and a max id whose fold
+    would overflow a long.
     """
     if budget <= 0:
         raise ValueError("budget must be positive")
-    d = docs.where(F.col(token_col) > 0)
+    # The input is evaluated once: the validation aggregate and the
+    # scan both read this checkpoint.
+    d = docs.where(F.col(token_col) > 0).localCheckpoint()
     # One driver job fetches max(id) for K and, for free in the same
     # agg, validates the fold's preconditions: quality outside
     # [0, 1000] or a negative id would silently corrupt the packed
@@ -150,13 +160,11 @@ def budget_select(
         ),
         # fractional ids (10.2, 10.6) long-truncate into COLLIDING
         # order keys — tied rows then share one inclusive cumsum and
-        # the budget cut silently drops/keeps the wrong docs
-        F.max(
-            F.abs(
-                F.col(id_col).cast("double")
-                - F.round(F.col(id_col).cast("double"))
-            )
-        ).alias("idfrac"),
+        # the budget cut silently drops/keeps the wrong docs.  The id
+        # is compared with its long in the id's own type: a cast
+        # through double would round a fractional decimal id above
+        # 2^53 to an integral double and let it pass.
+        F.sum((F.col(id_col).cast("long") != F.col(id_col)).cast("long")).alias("idfrac"),
     ).first()
     if st["idnulls"]:
         # before the hi-is-None early return: an all-NULL id column
@@ -173,8 +181,8 @@ def budget_select(
         raise ValueError(f"{id_col} must be non-negative (min={st['lo']})")
     if st["idfrac"]:
         raise ValueError(
-            f"{id_col} must be integral (max fractional part"
-            f" {st['idfrac']}) — truncation would collide order keys"
+            f"{id_col} must be integral ({st['idfrac']} row(s) with a"
+            " fractional part) — truncation would collide order keys"
         )
     if st["qnulls"] or st["qlo"] is None:
         raise ValueError(
@@ -188,12 +196,17 @@ def budget_select(
             f" max fractional part {st['qfrac']})"
         )
     k = int(hi) + 1
+    key_lo = (1000 - int(st["qhi"])) * k + int(st["lo"])
+    key_hi = (1000 - int(st["qlo"])) * k + int(hi)
+    if key_hi >= 1 << 63:
+        raise ValueError(f"max {id_col} {hi} overflows the long order key"
+                         f" (1000 - quality) * (max id + 1) + id: {key_hi}")
     keyed = d.withColumn(
         "_okey",
         (F.lit(1000) - F.col(quality_col).cast("long")) * F.lit(k)
         + F.col(id_col).cast("long"),
     )
-    s = global_token_starts(keyed, token_col, "_okey", n_buckets)
+    s = _range_starts(keyed, token_col, "_okey", key_lo, key_hi, n_buckets)
     return (
         s.withColumn(
             "cum_tokens", F.col("_start") + F.col(token_col).cast("long")

@@ -276,9 +276,12 @@ def cm_build(df, key_col: str, w: int = 1 << 14, d: int = 4):
     ALWAYS (hard one-sided bound), ``est <= exact + e*N/w`` with
     probability ``1 - e^-d`` per query.
 
-    Driver assembly mirrors the Bloom/cuckoo broadcast fast path: d*w
-    int64s (d=4, w=16384 -> 512 KB) regardless of corpus size; past
-    that, the partial rows themselves are the mergeable table."""
+    Driver assembly mirrors the Bloom/cuckoo broadcast fast path
+    (``operators/bloom.py``): d*w int64s (d=4, w=16384 -> 512 KB)
+    regardless of corpus size; past that, the partial rows themselves
+    are the mergeable table.  It does not share that gate's sharded
+    build on purpose: count-min sums additive per-partition partials,
+    where a URL-seen filter owns one shard table per hash range."""
     if d > len(_CM_SEEDS):
         raise ValueError(f"d <= {len(_CM_SEEDS)} supported, got {d}")
     import numpy as np

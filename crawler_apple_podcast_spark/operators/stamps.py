@@ -130,7 +130,11 @@ def write_stamped_bucketed(
     parameter-CHANGING overwrite the old stamp is dropped first, so
     dying after the data write leaves a stampless table (probes pass
     unguarded, legacy semantics) instead of a stale stamp that
-    validates the wrong hash family and rejects the right one."""
+    validates the wrong hash family and rejects the right one.  A data
+    overwrite that RAISES leaves no table at all: the session catalog
+    drops the old table before the write job runs, so there is no old
+    data for the dropped stamp to vouch for, and a later open fails on
+    the missing table (pinned in ``tests/test_stamps.py``)."""
     spark = index.sparkSession
     validate_before_write(spark, table, params, mode)
     if mode == "overwrite":

@@ -1,5 +1,6 @@
-"""Sharded Bloom gate: no false negatives ever; gated anti-join is
-byte-equal to the exact anti-join."""
+"""Sharded URL-seen gate: no false negatives ever; gated anti-join is
+byte-equal to the exact anti-join, for the Bloom filter and (on
+arbitrary keys) for the cuckoo filter that shares its gate."""
 
 from __future__ import annotations
 
@@ -9,6 +10,11 @@ from crawler_apple_podcast_spark.operators.bloom import (
     build_bloom_shards,
     bloom_gated_anti_join,
     probe_bloom,
+)
+from crawler_apple_podcast_spark.operators.cuckoo import (
+    build_cuckoo_shards,
+    cuckoo_gated_anti_join,
+    delete_from_cuckoo,
 )
 
 
@@ -123,6 +129,12 @@ from hypothesis import given, settings, strategies as st
 _key = st.one_of(st.none(), st.text(min_size=0, max_size=12))
 
 
+def _exact_keys(cdf, sdf):
+    # SQL NULL never matches in an anti-join, so NULL candidates are
+    # already present in the exact anti-join's output.
+    return sorted(r.url or "" for r in cdf.join(sdf, "url", "left_anti").collect())
+
+
 @settings(max_examples=8, deadline=None)
 @given(
     st.lists(_key, min_size=1, max_size=25),
@@ -131,14 +143,12 @@ _key = st.one_of(st.none(), st.text(min_size=0, max_size=12))
 def test_bloom_gate_equals_exact_on_arbitrary_keys(spark, cand, seen):
     """Random unicode / empty / NULL keys, both confirm modes: the
     Bloom gate is a pure pre-filter — output multiset must equal the
-    plain exact anti-join, whatever the keys look like."""
-    cdf = spark.createDataFrame([(k,) for k in cand], "url STRING")
+    plain exact anti-join, whatever the keys look like.  The seen keys
+    are candidates too, so a false negative (a seen key probing new)
+    shows as an extra output row."""
+    cdf = spark.createDataFrame([(k,) for k in cand + seen], "url STRING")
     sdf = spark.createDataFrame([(k,) for k in seen], "url STRING")
-    # SQL NULL never matches in an anti-join, so NULL candidates are
-    # already present in the exact anti-join's output.
-    want = sorted(
-        r.url or "" for r in cdf.join(sdf, "url", "left_anti").collect()
-    )
+    want = _exact_keys(cdf, sdf)
     bloom = build_bloom_shards(sdf.where(F.col("url").isNotNull()),
                                n_shards=2, m_bits=1 << 8, k=3)
     for mode in ("key", "hashes"):
@@ -147,3 +157,27 @@ def test_bloom_gate_equals_exact_on_arbitrary_keys(spark, cand, seen):
             for r in bloom_gated_anti_join(cdf, sdf, bloom, confirm_on=mode).collect()
         )
         assert got == want, (mode, got, want)
+
+
+@settings(max_examples=8, deadline=None)
+@given(
+    st.lists(_key, min_size=1, max_size=25),
+    st.lists(_key, min_size=1, max_size=25),
+)
+def test_cuckoo_gate_equals_exact_on_arbitrary_keys(spark, cand, seen):
+    """The cuckoo filter rides the same gate: on the same random keys,
+    with NULL seen keys inserted into the filter and a table small
+    enough to overflow, its gated anti-join equals the exact one —
+    also after deleting a subset of keys from both the filter and the
+    seen table.  The seen keys are candidates too, so a false negative
+    (a seen key probing new) shows as an extra output row."""
+    cdf = spark.createDataFrame([(k,) for k in cand + seen], "url STRING")
+    sdf = spark.createDataFrame([(k,) for k in seen], "url STRING")
+    filt = build_cuckoo_shards(sdf, n_shards=2, buckets_per_shard=2, slots=2)
+    got = sorted((r.url or "") for r in cuckoo_gated_anti_join(cdf, sdf, filt).collect())
+    assert got == _exact_keys(cdf, sdf), got
+    gone = sorted({k for k in seen[::2] if k is not None})
+    filt = delete_from_cuckoo(filt, spark.createDataFrame([(k,) for k in gone], "url STRING"))
+    after = spark.createDataFrame([(k,) for k in seen if k not in gone], "url STRING")
+    got = sorted((r.url or "") for r in cuckoo_gated_anti_join(cdf, after, filt).collect())
+    assert got == _exact_keys(cdf, after), (gone, got)

@@ -287,3 +287,38 @@ def test_budget_select_refuses_null_ids(spark):
     )
     with pytest.raises(ValueError, match="non-NULL integer"):
         budget_select(all_null, "n_tokens", 100, "q").collect()
+
+
+def test_budget_select_refuses_order_key_overflow(spark):
+    """The fold ``(1000 - quality) * (max id + 1) + id`` must fit a
+    long: a max id that overflows it is refused, while the same ids at
+    quality 1000 (whose keys are the ids themselves) still select."""
+    import pytest
+
+    from crawler_apple_podcast_spark.operators.packing import budget_select
+
+    schema = "doc_id LONG, n_tokens LONG, q LONG"
+    big = spark.createDataFrame([(0, 10, 500), (1 << 62, 10, 500)], schema)
+    with pytest.raises(ValueError, match="overflows"):
+        budget_select(big, "n_tokens", 100, "q").collect()
+    top = spark.createDataFrame([(0, 10, 1000), (1 << 62, 10, 1000)], schema)
+    got = sorted((r.doc_id, r.cum_tokens) for r in budget_select(top, "n_tokens", 100, "q").collect())
+    assert got == [(0, 10), (1 << 62, 20)]
+
+
+def test_budget_select_refuses_fractional_id_above_2_pow_53(spark):
+    """A fractional decimal id above 2^53 casts to an integral double,
+    so an integrality check through double lets it pass, and the long
+    cast then collides it with its integer neighbour."""
+    from decimal import Decimal
+
+    import pytest
+
+    from crawler_apple_podcast_spark.operators.packing import budget_select
+
+    df = spark.createDataFrame(
+        [(Decimal("9007199254740993.5"), 10, 500.0), (Decimal("9007199254740993"), 10, 500.0)],
+        "doc_id DECIMAL(20,1), n_tokens LONG, q DOUBLE",
+    )
+    with pytest.raises(ValueError, match="integral"):
+        budget_select(df, "n_tokens", 100, "q").collect()

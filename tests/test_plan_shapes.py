@@ -207,6 +207,35 @@ def test_redirect_resolution_round_count_is_logarithmic(spark, job_group):
     assert "CartesianProduct" not in p and "SinglePartition" not in p
 
 
+def test_connected_components_runs_one_job_per_round(spark, job_group):
+    # Min-label propagation over a path of n edges takes n+1 rounds (n
+    # to carry label 0 to the far end, one to see nothing change).  A
+    # round is its checkpoint alone: the changed count is observed on
+    # it, not counted by a second job.  AQE runs each shuffle stage as
+    # a job of its own, so the count is read with AQE off, where a
+    # checkpoint is one job; the constant 2 is the symmetrized edges
+    # and the initial labels.
+    from crawler_apple_podcast_spark.operators.graph import connected_components
+
+    aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try:
+        for n in (2, 9):
+            edges = spark.createDataFrame(
+                [(i, i + 1) for i in range(n)], "doc_a LONG, doc_b LONG"
+            )
+            with job_group(f"cc-rounds-{n}") as g:
+                out = connected_components(edges)
+                jobs = g.jobs()
+            assert jobs <= (n + 1) + 2, (n, jobs)
+            assert sorted(tuple(r) for r in out.collect()) == [(i, 0) for i in range(n + 1)]
+        # an empty round sums to NULL: it ends the loop like a zero
+        empty = spark.createDataFrame([], "doc_a LONG, doc_b LONG")
+        assert connected_components(empty).count() == 0
+    finally:
+        spark.conf.set("spark.sql.adaptive.enabled", aqe)
+
+
 def test_inverted_index_window_and_group_share_term_exchange(spark, qs):
     # The df cutoff must reach the posting branch as a BROADCAST join
     # (stopword rows die before any term-keyed shuffle), and the
